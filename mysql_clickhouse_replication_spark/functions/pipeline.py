@@ -3235,6 +3235,19 @@ def _sql_larr(vals) -> str:
     return "array(" + ",".join(f"{int(v)}L" for v in vals) + ")"
 
 
+def _cents_sql(entries) -> str:
+    """Collected (cid, cv) centroid structs as a BIGINT-exact SQL array
+    literal.  A corpus with no centroid rows gives a TYPED empty array,
+    so the consumers' ``c.cid`` / ``c.cv`` lambdas still resolve (an
+    untyped ``array()`` fails analysis at construction)."""
+    if not entries:
+        return "CAST(array() AS array<struct<cid:bigint,cv:array<bigint>>>)"
+    return "array(" + ",".join(
+        f"named_struct('cid', {int(c['cid'])}L, 'cv', {_sql_larr(c['cv'])})"
+        for c in entries
+    ) + ")"
+
+
 def _opq_cball_lit(spark: SparkSession, cb: dict) -> DataFrame:
     """Driver-held codebook {(m, cid): sv} as the literal 1-row
     ``cball`` frame (array of struct(m, cid, sv), ordered by (m, cid)
@@ -3375,14 +3388,6 @@ def _opq_spaces(
     # is paid on first construction and recorded by the bench's
     # extra_queries_cold, the _opq_train_state discipline.
     crow = cents_plan.collect()[0]
-
-    def _cents_sql(entries) -> str:
-        return "array(" + ",".join(
-            f"named_struct('cid', {int(c['cid'])}L,"
-            f" 'cv', {_sql_larr(c['cv'])})"
-            for c in entries
-        ) + ")"
-
     cents = _local_1row_sql(
         spark,
         f"{_cents_sql(crow['pcents'])} AS pcents,"
@@ -3526,14 +3531,7 @@ def _ivf_centroids_frame(
     # materialization (a production IVF index trains its centroids
     # once; queries never re-derive them).
     crow = ivfc_plan.collect()[0]
-    ivfc = _local_1row_sql(
-        spark,
-        "array(" + ",".join(
-            f"named_struct('cid', {int(c['cid'])}L,"
-            f" 'cv', {_sql_larr(c['cv'])})"
-            for c in crow["ivfc"]
-        ) + ") AS ivfc",
-    )
+    ivfc = _local_1row_sql(spark, f"{_cents_sql(crow['ivfc'])} AS ivfc")
     _IVFC_MEMO[key] = ivfc
     return ivfc
 

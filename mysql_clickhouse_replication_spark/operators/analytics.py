@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..session import scratch_path, table
+from ..session import scratch_path, session_memo_lookup, table
 from ._util import D12, banded_row_number, ntile_from_rank, values_df
 
 
@@ -2831,7 +2831,7 @@ def _degree_frame_broadcastable(spark: SparkSession, sf_dir: str) -> bool:
         os.path.abspath(sf_dir),
         raw,
     )
-    hit = _DEG_BCAST_MEMO.get(memo_key)
+    hit = session_memo_lookup(_DEG_BCAST_MEMO, memo_key)
     if hit is not None:
         return hit
     _DEG_BCAST_MEMO[memo_key] = out = _degree_bcast_uncached(spark, sf_dir, raw)

@@ -1426,6 +1426,101 @@ def cdc_wide_row_reassemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: Decoded changelog rows, as every binlog decode key returns them.
+_DECODED = "op string, pk bigint, seq bigint, value double"
+
+
+def _conf_bytes(spark: SparkSession, key: str) -> int:
+    """A byte-size SQL conf ("128MB", "16k", "4194304") in bytes, parsed
+    by Spark's own byte-string parser."""
+    return int(
+        spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+            spark.conf.get(key)
+        )
+    )
+
+
+def decode_ranges(
+    spark: SparkSession, ranges: list[tuple[str, int, int]]
+) -> DataFrame:
+    """Decode log-ordered binlog byte ranges ``(path, lo, hi)`` in
+    parallel, each ``lo``/``hi`` a transaction or file boundary.
+
+    The ranges are packed into tasks by Spark's own file-split rule
+    (binlog_wire.pack_ranges over the session's
+    ``spark.sql.files.maxPartitionBytes``, ``openCostInBytes`` and
+    ``defaultParallelism``), so a small log is ONE task and a large one
+    fans out in split-sized pieces, never split inside a range.  The
+    task table is tiny and travels in the closure: ``spark.range(0, n,
+    1, n)`` gives partition ``i`` exactly the id ``i``, and that task
+    decodes its own ranges via mapInArrow — one stage, no Exchange, no
+    LocalRelation to scatter.  A Python task costs ~0.2 CPU-s before
+    the UDF runs (docs/OPERATORS.md): for a small log the task count,
+    not the decode, sets the cost.
+
+    Each task performs RANGED reads of its bytes (seek + read, the
+    object-store GET-range shape), adjacent ranges of one file merged
+    into one read, re-framed behind a fresh MAGIC for the decoder.
+    Output is Arrow with exact int64 pk/seq, for the reason given in
+    rowbinary.encode_batches: pandas would widen nullable int64 to
+    float64.  Files are re-opened by PATH on executors, so they must be
+    visible to every executor (local mode, a shared filesystem or an
+    object store)."""
+    from itertools import islice
+
+    from ..sources.binlog_wire import MAGIC, decode, pack_ranges
+
+    tasks = pack_ranges(
+        ranges,
+        _conf_bytes(spark, "spark.sql.files.maxPartitionBytes"),
+        _conf_bytes(spark, "spark.sql.files.openCostInBytes"),
+        spark.sparkContext.defaultParallelism,
+    )
+    if not tasks:  # empty binlog: zero transactions recorded
+        return spark.createDataFrame([], _DECODED)
+    spans = []  # per task: its ranges with adjacent same-file ones merged
+    for task in tasks:
+        merged = []
+        for path, lo, hi in task:
+            if merged and merged[-1][0] == path and merged[-1][2] == lo:
+                merged[-1] = (path, merged[-1][1], hi)
+            else:
+                merged.append((path, lo, hi))
+        spans.append(merged)
+    batch_rows = int(
+        spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    )
+
+    def read(path, lo, hi):
+        with open(path, "rb") as fh:
+            fh.seek(lo)
+            return fh.read(hi - lo)
+
+    def decode_task(batches):
+        import pyarrow as pa
+
+        schema = pa.schema(
+            [("op", pa.string()), ("pk", pa.int64()),
+             ("seq", pa.int64()), ("value", pa.float64())]
+        )
+        for batch in batches:
+            for i in batch.column(0).to_pylist():
+                rows = (
+                    row
+                    for path, lo, hi in spans[i]
+                    for row, _ in decode(MAGIC + read(path, lo, hi))
+                )
+                while chunk := list(islice(rows, batch_rows)):
+                    yield pa.RecordBatch.from_arrays(
+                        [pa.array(c, type=f.type)
+                         for c, f in zip(zip(*chunk), schema)],
+                        schema=schema,
+                    )
+
+    n = len(spans)
+    return spark.range(0, n, 1, n).mapInArrow(decode_task, _DECODED)
+
+
 @register(
     "cdc_decode_sharded",
     oracle="""
@@ -1437,8 +1532,8 @@ FROM events
 """,
 )
 def cdc_decode_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed binlog decode fan-out — the sharded form of the one
-    serial tail the r9 verdict named ("What's missing" #2): where
+    """Distributed binlog decode — the sharded form of the one serial
+    tail the r9 verdict named ("What's missing" #2): where
     ``cdc_stream_source`` decodes the byte stream on the driver (a
     binlog IS one serial stream, so the STREAMING reader mirrors the
     reference's single replication thread), this key decodes the SAME
@@ -1450,23 +1545,18 @@ def cdc_decode_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     walk (binlog_wire.tx_boundaries_stream — 19-byte fixed headers
     read one at a time, event bodies seek()-skipped unread, so driver
     memory stays O(1) in log size; r10 verdict "What's wrong" #1
-    closed), which yields every post-XID offset; the offsets are cut
-    into contiguous transaction-aligned byte shards, and each shard's
-    EXPENSIVE image decode runs as its own task via mapInPandas
-    (Arrow-batched; the decoder is the same resumable byte walker the
-    streaming source uses, so shard boundaries are provably legal
-    resume points).  Each task performs a RANGED read of exactly its
-    shard's bytes (seek + read — the object-store GET-range shape),
-    never the whole log.  Executor tasks re-open the recorded log by
-    PATH, so the file must be visible to every executor — true in
-    local mode and on any shared filesystem / object store (where the
-    open+seek+read becomes a GET-range); on a shared-nothing cluster
-    the recorder would land the log on the shared store first.  In
-    production the index is even cheaper: one shard per rotated binlog
-    FILE from the server's rotation metadata, no walk at all
-    (cdc_decode_multifile is exactly that form).
+    closed), which yields every post-XID offset.  Each transaction is
+    one byte range, and decode_ranges packs the ranges into
+    split-sized tasks (Spark's file-split rule over the session's
+    maxPartitionBytes / openCostInBytes / defaultParallelism): one task
+    for a log under the open cost (4 MB by default), one per split
+    beyond it.  Cuts fall only at post-XID offsets, provably legal
+    resume points of the same resumable byte walker the streaming
+    source uses.  In production the index is even cheaper: one range
+    per rotated binlog FILE from the server's rotation metadata, no
+    walk at all (cdc_decode_multifile is exactly that form).
 
-    Decode work distributes; ORDER does not — cross-shard ordering is
+    Decode work distributes; ORDER does not — cross-task ordering is
     re-established downstream by seq exactly as the streaming path
     orders by (log_file, log_pos) (cdc_binlog_position_order), so the
     surface here is the decoded row SET, hash-checked against the
@@ -1474,62 +1564,15 @@ def cdc_decode_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     null bitmap and must survive the fan-out byte-identically."""
     from ..sources.binlog_wire import (
         MAGIC,
-        decode,
         record_changelog,
         tx_boundaries_stream,
     )
 
     path = record_changelog(f"{sf_dir}/events.parquet")
     bounds = [len(MAGIC), *tx_boundaries_stream(path)]
-    ntx = len(bounds) - 1
-    n_shards = max(1, min(ntx, spark.sparkContext.defaultParallelism))
-    shards = []
-    for i in range(n_shards):
-        lo = bounds[(i * ntx) // n_shards]
-        hi = bounds[((i + 1) * ntx) // n_shards]
-        if lo < hi:
-            shards.append((i, lo, hi))
-    schema = "op string, pk bigint, seq bigint, value double"
-    if not shards:  # empty binlog: zero transactions recorded
-        return spark.createDataFrame([], schema)
-
-    def decode_shard(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for lo, hi in zip(pdf["lo"], pdf["hi"]):
-                # RANGED read — each task touches only its shard's bytes
-                # (seek + read, the object-store GET-range shape), never
-                # the whole log.  The decoder walks positions relative
-                # to buffer start, so the shard is re-framed behind a
-                # fresh MAGIC and decoded over its full extent.
-                with open(path, "rb") as fh:
-                    fh.seek(int(lo))
-                    chunk = fh.read(int(hi) - int(lo))
-                blob = MAGIC + chunk
-                rows = [r for r, _ in decode(blob, len(MAGIC))]
-                yield pd.DataFrame(
-                    {
-                        "op": [r[0] for r in rows],
-                        "pk": pd.array(
-                            [r[1] for r in rows], dtype="Int64"
-                        ),
-                        "seq": pd.array(
-                            [r[2] for r in rows], dtype="Int64"
-                        ),
-                        "value": pd.array(
-                            [r[3] for r in rows], dtype="float64"
-                        ),
-                    }
-                )
-
-    # Round-robin repartition(n) — NOT hash on shard_id (r10 advice:
-    # hash partitioning can collide several shard_ids into one task,
-    # leaving others empty) — guarantees exactly one shard per task.
-    sdf = spark.createDataFrame(
-        shards, "shard_id int, lo bigint, hi bigint"
-    ).repartition(n_shards)
-    return sdf.mapInPandas(decode_shard, schema)
+    return decode_ranges(
+        spark, [(path, lo, hi) for lo, hi in zip(bounds, bounds[1:])]
+    )
 
 
 @register(
@@ -1550,14 +1593,16 @@ def cdc_decode_multifile(spark: SparkSession, sf_dir: str) -> DataFrame:
     next file + a fresh FORMAT_DESCRIPTION per file — the public
     binlog-v4 layout, encoded faithfully by binlog_wire.
     encode_changelog_rotated), so hours of backlog arrive as a CHAIN
-    of files and the natural shard is the FILE: no index walk at all,
+    of files and the natural range is the FILE: no index walk at all,
     the server's rotation metadata IS the index.
 
-    Each task decodes exactly one rotated file end-to-end with the
-    same resumable byte walker the streaming source uses (a file
-    boundary is by construction a transaction boundary — MySQL rotates
-    only at event-group boundaries — so per-file decode needs no
-    re-framing at all, unlike the ranged shards).  ROTATE and
+    Each rotated file is the range ``[4, size)``: a file boundary is by
+    construction a transaction boundary (MySQL rotates only at
+    event-group boundaries), and since ``file[:4] == MAGIC`` decoding
+    that range re-framed behind MAGIC is byte-identical to decoding
+    the whole file.  decode_ranges packs whole files into split-sized
+    tasks (one task per ~4 MB by default rather than one Python task
+    per 64 KB file), never splitting a file.  ROTATE and
     FORMAT_DESCRIPTION events are header-skipped by event_size, and
     the chain linkage (each file's ROTATE names its successor and the
     post-magic start position) is property-tested against the names'
@@ -1568,34 +1613,10 @@ def cdc_decode_multifile(spark: SparkSession, sf_dir: str) -> DataFrame:
     (file_idx, log_pos), exactly cdc_binlog_position_order's total
     key, re-established downstream; the hash-checked surface is the
     decoded row SET.  Files are opened by PATH on executors (shared
-    filesystem / object store, same note as cdc_decode_sharded).
-    Round-robin repartition guarantees one file per task (r10 advice:
-    hash partitioning could collide files into one task)."""
-    from ..sources.binlog_wire import decode, record_changelog_rotated
+    filesystem / object store, see decode_ranges)."""
+    from ..sources.binlog_wire import MAGIC, record_changelog_rotated
 
     paths = record_changelog_rotated(f"{sf_dir}/events.parquet")
-    schema = "op string, pk bigint, seq bigint, value double"
-
-    def decode_file(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for p in pdf["path"]:
-                with open(p, "rb") as fh:
-                    blob = fh.read()  # one rotated file IS the shard
-                rows = [r for r, _ in decode(blob)]
-                yield pd.DataFrame(
-                    {
-                        "op": [r[0] for r in rows],
-                        "pk": pd.array([r[1] for r in rows], dtype="Int64"),
-                        "seq": pd.array([r[2] for r in rows], dtype="Int64"),
-                        "value": pd.array(
-                            [r[3] for r in rows], dtype="float64"
-                        ),
-                    }
-                )
-
-    sdf = spark.createDataFrame(
-        list(enumerate(paths)), "file_idx int, path string"
-    ).repartition(len(paths))
-    return sdf.mapInPandas(decode_file, schema)
+    return decode_ranges(
+        spark, [(p, len(MAGIC), os.path.getsize(p)) for p in paths]
+    )

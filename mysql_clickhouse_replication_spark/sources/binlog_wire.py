@@ -51,6 +51,9 @@ fan out to executors (sources/binlog.py).
 
 from __future__ import annotations
 
+import bisect
+import itertools
+import math
 import os
 import struct
 from collections.abc import Iterable, Iterator
@@ -425,6 +428,36 @@ def tx_boundaries_stream(path: str, start: int = len(MAGIC)) -> list[int]:
                 bounds.append(pos + size)
             pos += size
     return bounds
+
+
+def pack_ranges(
+    ranges: list[tuple[str, int, int]],
+    max_partition_bytes: int,
+    open_cost: int,
+    parallelism: int,
+) -> list[list[tuple[str, int, int]]]:
+    """Pack log-ordered byte ranges ``(path, lo, hi)`` into decode tasks
+    by Spark's own file-split rule (``FilePartition.maxSplitBytes``):
+    ``split = min(max_partition_bytes, max(open_cost, total /
+    parallelism))`` and ``ceil(total / split)`` tasks, clamped to
+    ``[1, len(ranges)]`` because a range is never split — each is a
+    transaction group or a whole file, the only legal resume points.
+
+    Tasks are contiguous runs of ranges in log order, and every task
+    holds at least one range; each cut sits at the first range boundary
+    at or past an even byte share.  No ranges, no tasks."""
+    if not ranges:
+        return []
+    ends = list(itertools.accumulate(hi - lo for _, lo, hi in ranges))
+    total = ends[-1]
+    split = min(max_partition_bytes, max(open_cost, total / parallelism))
+    n = max(1, min(len(ranges), math.ceil(total / split)))
+    cuts = [0]
+    for k in range(1, n):
+        j = bisect.bisect_left(ends, total * k / n)  # first end >= share
+        cuts.append(min(max(j + 1, cuts[-1] + 1), len(ranges) - (n - k)))
+    cuts.append(len(ranges))
+    return [ranges[a:b] for a, b in zip(cuts, cuts[1:])]
 
 
 def record_changelog(events_parquet: str) -> str:

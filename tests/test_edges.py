@@ -1572,6 +1572,36 @@ def test_shuf_d2_guard_fires_past_bound(spark):
         bad.collect()
 
 
+def test_opq_ivf_state_typed_empty_without_centroid_rows(
+    spark, sf_dir, tmp_path_factory
+):
+    """ADVICE: the OPQ codebooks and IVF centroids are collected from the
+    corpus rows with vec_id < K.  On an embeddings table with none of
+    those rows the literal state must be a TYPED empty array — an
+    untyped ``array()`` failed analysis of the ``c.cid`` / ``c.cv``
+    lambdas at construction — and every corpus row still gets its
+    (empty-codebook) argmin columns."""
+    from mysql_clickhouse_replication_spark.functions.pipeline import (
+        _ivf_centroids_frame,
+        _opq_spaces,
+    )
+
+    d = tmp_path_factory.mktemp("emb_no_centroids")
+    duckdb.connect().execute(
+        "COPY (SELECT * REPLACE (vec_id + 1000 AS vec_id) FROM"
+        f" read_parquet('{sf_dir}/embeddings.parquet'))"
+        f" TO '{d}/embeddings.parquet' (FORMAT parquet)"
+    )
+    both, cents, out = _opq_spaces(spark, str(d))
+    typed = "array<struct<cid:bigint,cv:array<bigint>>>"
+    assert cents.dtypes == [("pcents", typed), ("rcents", typed)]
+    assert [tuple(r) for r in cents.collect()] == [([], [])]
+    assert out.count() == both.count() > 0
+    ivfc = _ivf_centroids_frame(spark, str(d), both)
+    assert ivfc.dtypes == [("ivfc", typed)]
+    assert [tuple(r) for r in ivfc.collect()] == [([],)]
+
+
 def test_session_memo_lookup_evicts_dead_sessions(spark):
     """The r13 ADVICE memo fix, unit-tested: entries keyed by a DEAD
     applicationId are evicted (and unpersisted where possible) on any

@@ -1816,15 +1816,93 @@ def test_perplexity_nosort_no_language_sized_window(plans, spark):
     assert cum and all("lang" in g for g in cum), p
 
 
-def test_decode_sharded_parallel_map_in_pandas(plans, spark, sf_dir):
-    """cdc_decode_sharded: the decode fans out as MapInPandas over
-    multiple transaction-aligned shards — the executed plan carries the
-    Arrow map node, and the shard frame occupies >1 partition so the
-    image decode genuinely parallelizes (the r9 serial-tail item)."""
-    df = e.queries()["cdc_decode_sharded"](spark, sf_dir)
-    p = plans("cdc_decode_sharded")
-    assert "MapInPandas" in p, p
-    assert df.rdd.getNumPartitions() > 1, df.rdd.getNumPartitions()
+def _decode_split_tasks(spark, ranges) -> int:
+    """Task count Spark's file-split rule gives ``ranges`` under the
+    session's confs — the formula decode_ranges must follow."""
+    import math
+
+    from mysql_clickhouse_replication_spark.plans.cdc import _conf_bytes
+
+    total = sum(hi - lo for _, lo, hi in ranges)
+    split = min(
+        _conf_bytes(spark, "spark.sql.files.maxPartitionBytes"),
+        max(
+            _conf_bytes(spark, "spark.sql.files.openCostInBytes"),
+            total / spark.sparkContext.defaultParallelism,
+        ),
+    )
+    return max(1, min(len(ranges), math.ceil(total / split)))
+
+
+def _assert_decode_split(plans, spark, sf_dir, duck, key, ranges):
+    """A decode key runs as ONE Arrow map stage over Range with no
+    Exchange, in exactly the split-rule task count (1 for a log under
+    the open cost); with maxPartitionBytes lowered to 16 KB the same
+    key fans out over >1 task and still hash-matches the oracle."""
+    from tools.verify_local import _hash_rows
+
+    p = plans(key)
+    assert "MapInArrow" in p and "Range (" in p, p
+    assert "MapInPandas" not in p and "Exchange" not in p, p
+    df = e.queries()[key](spark, sf_dir)
+    assert df.rdd.getNumPartitions() == _decode_split_tasks(spark, ranges)
+    if sum(hi - lo for _, lo, hi in ranges) < 4 << 20:
+        assert df.rdd.getNumPartitions() == 1
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "16k")
+    try:
+        df = e.queries()[key](spark, sf_dir)
+        n = df.rdd.getNumPartitions()
+        assert n > 1 and n == _decode_split_tasks(spark, ranges), n
+        rows = [tuple(r) for r in df.collect()]
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+    res = duck.execute(e.oracle_sql()[key])
+    orows = res.fetchall()
+    assert len(rows) == len(orows)
+    assert _hash_rows(df.columns, rows) == _hash_rows(
+        [d[0] for d in res.description], orows
+    )
+
+
+def test_decode_empty_log_is_typed_empty_frame(spark, tmp_path):
+    """A binlog holding no transaction packs into no task: decode_ranges
+    returns a typed empty frame, not a zero-partition Range."""
+    from mysql_clickhouse_replication_spark.plans.cdc import decode_ranges
+    from mysql_clickhouse_replication_spark.sources.binlog_wire import (
+        MAGIC,
+        encode_changelog,
+        tx_boundaries_stream,
+    )
+
+    path = str(tmp_path / "empty.binlog")
+    with open(path, "wb") as fh:
+        fh.write(encode_changelog([]))
+    bounds = [len(MAGIC), *tx_boundaries_stream(path)]
+    df = decode_ranges(
+        spark, [(path, lo, hi) for lo, hi in zip(bounds, bounds[1:])]
+    )
+    assert df.dtypes == [
+        ("op", "string"), ("pk", "bigint"), ("seq", "bigint"),
+        ("value", "double"),
+    ]
+    assert df.collect() == []
+
+
+def test_decode_sharded_split_sized_arrow_tasks(plans, spark, sf_dir, duck):
+    """cdc_decode_sharded: transaction ranges from the header-only index
+    walk, packed into split-sized Arrow map tasks (the r9 serial-tail
+    item stays closed: a lowered split fans the decode out)."""
+    from mysql_clickhouse_replication_spark.sources.binlog_wire import (
+        MAGIC,
+        record_changelog,
+        tx_boundaries_stream,
+    )
+
+    path = record_changelog(f"{sf_dir}/events.parquet")
+    bounds = [len(MAGIC), *tx_boundaries_stream(path)]
+    ranges = [(path, lo, hi) for lo, hi in zip(bounds, bounds[1:])]
+    _assert_decode_split(plans, spark, sf_dir, duck, "cdc_decode_sharded", ranges)
 
 
 def test_interval_coverage_user_partitioned_two_exchanges(plans):
@@ -1936,14 +2014,19 @@ def test_triangle_degree_broadcast_bounded(spark, sf_dir, plans):
     really broadcasts the degree frame, (b) the sf1 fixture family
     (10x sf0.1's parts) is OVER the 10 MB default — the reason the
     guard exists — and (c) shrinking the threshold flips the guard and
-    the plan to the shuffle-join fallback with no broadcast anywhere."""
+    the plan to the shuffle-join fallback with no broadcast anywhere.
+    The guard's memo evicts entries of dead sessions on lookup."""
     import duckdb
 
     from mysql_clickhouse_replication_spark.operators.analytics import (
+        _DEG_BCAST_MEMO,
         _degree_frame_broadcastable,
     )
 
+    stale = ("app-dead-session", sf_dir, "10485760")
+    _DEG_BCAST_MEMO[stale] = True
     assert _degree_frame_broadcastable(spark, sf_dir)
+    assert stale not in _DEG_BCAST_MEMO
     assert "BroadcastHashJoin" in plans("graph_triangle_count")
 
     (n01,) = duckdb.connect().execute(
@@ -1963,23 +2046,23 @@ def test_triangle_degree_broadcast_bounded(spark, sf_dir, plans):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_decode_multifile_one_file_per_task(plans, spark, sf_dir):
-    """cdc_decode_multifile: shards = rotated files, one per task —
-    the executed plan carries MapInPandas fed by a ROUND-ROBIN exchange
-    (r10 advice: hash-on-shard_id could collide files into one task),
-    the gate fixture actually rotates (>1 file => >1 partition), and
-    the partition count equals the recorded chain length."""
+def test_decode_multifile_whole_files_per_task(plans, spark, sf_dir, duck):
+    """cdc_decode_multifile: each rotated file is one range [4, size),
+    never split; the gate fixture actually rotates (>1 file), so the
+    lowered split runs the files as separate tasks."""
+    import os
+
     from mysql_clickhouse_replication_spark.sources.binlog_wire import (
+        MAGIC,
         record_changelog_rotated,
     )
 
-    df = e.queries()["cdc_decode_multifile"](spark, sf_dir)
-    p = plans("cdc_decode_multifile")
-    assert "MapInPandas" in p, p
-    assert "RoundRobinPartitioning" in p, p
-    n_files = len(record_changelog_rotated(f"{sf_dir}/events.parquet"))
-    assert n_files > 1, n_files  # rotation must fire at the gate SF
-    assert df.rdd.getNumPartitions() == n_files
+    paths = record_changelog_rotated(f"{sf_dir}/events.parquet")
+    assert len(paths) > 1, paths  # rotation must fire at the gate SF
+    ranges = [(p, len(MAGIC), os.path.getsize(p)) for p in paths]
+    _assert_decode_split(
+        plans, spark, sf_dir, duck, "cdc_decode_multifile", ranges
+    )
 
 
 def test_bpe_merge_step_one_corpus_scan_bounded_tops(plans, spark, sf_dir):

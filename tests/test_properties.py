@@ -720,6 +720,55 @@ def test_binlog_rotated_chain_decode_equals_serial(rows, max_bytes):
             list(decode(blob, b))  # post-XID offsets resume cleanly
 
 
+_range_logs = st.lists(  # per file: the byte sizes of its ranges, in log order
+    st.lists(st.integers(1, 1 << 20), min_size=1, max_size=40),
+    max_size=4,
+)
+
+
+@given(
+    files=_range_logs,
+    max_partition_bytes=st.integers(1, 1 << 24),
+    open_cost=st.integers(1, 1 << 23),
+    parallelism=st.integers(1, 64),
+)
+@settings(max_examples=300, deadline=None)
+def test_pack_ranges_split_rule(
+    files, max_partition_bytes, open_cost, parallelism
+):
+    """decode_ranges' packer, pure Python: every range lands in exactly
+    one task, unsplit; tasks are non-empty contiguous runs in log order;
+    the task count is Spark's file-split rule ceil(total / split),
+    clamped to [1, #ranges]; no task exceeds an even byte share by more
+    than one range; and an empty log packs into no tasks."""
+    import math
+
+    from mysql_clickhouse_replication_spark.sources.binlog_wire import (
+        MAGIC,
+        pack_ranges,
+    )
+
+    ranges = []
+    for f, sizes in enumerate(files):
+        lo = len(MAGIC)
+        for size in sizes:
+            ranges.append((f"log.{f:06d}", lo, lo + size))
+            lo += size
+    tasks = pack_ranges(ranges, max_partition_bytes, open_cost, parallelism)
+    if not ranges:
+        assert tasks == []
+        return
+    assert all(tasks)
+    assert [r for t in tasks for r in t] == ranges
+    total = sum(hi - lo for _, lo, hi in ranges)
+    split = min(max_partition_bytes, max(open_cost, total / parallelism))
+    n = len(tasks)
+    assert n == max(1, min(len(ranges), math.ceil(total / split)))
+    widest = max(hi - lo for _, lo, hi in ranges)
+    for t in tasks:
+        assert sum(hi - lo for _, lo, hi in t) <= total / n + widest
+
+
 _m4_pairs = st.lists(
     st.tuples(st.integers(0, 21_600_000_000 - 1), st.integers(0, 2**28 - 1)),
     min_size=2,

@@ -110,15 +110,17 @@ AUDIT = {
     "docs_quality_signals_gopher": "map-only higher-order-function signals "
     "(no Generate — nothing token-row-materialized) + one lang-keyed "
     "aggregation",
-    "cdc_decode_sharded": "MapInPandas decode over >1 transaction-aligned "
-    "byte shards; the header-only index walk is the only serial part",
+    "cdc_decode_sharded": "MapInArrow decode over Range, no Exchange: "
+    "transaction-aligned byte ranges packed into split-sized tasks (one "
+    "below the 4 MB open cost); the header-only index walk is the only "
+    "serial part",
     "events_watermark_lateness_sharded": "shard clock fully "
     "shard-partitioned (including its band-prefix combine); the single "
     "unpartitioned window is the global COMPARISON clock's |days|-row "
     "band combine — the documented cost the key quantifies against",
-    "cdc_decode_multifile": "MapInPandas decode fed by a ROUND-ROBIN "
-    "exchange, one rotated binlog file per task; no index walk at all "
-    "(the ROTATE chain is the index)",
+    "cdc_decode_multifile": "MapInArrow decode over Range, no Exchange: "
+    "whole rotated binlog files packed into split-sized tasks; no index "
+    "walk at all (the ROTATE chain is the index)",
     "text_bpe_merge_step": "one corpus scan into a pinned word-count "
     "frame (InMemoryRelation feeds both pair counting and "
     "re-segmentation); broadcast 1-row argmax attach; both top-10 "
