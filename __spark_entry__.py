@@ -8,220 +8,54 @@ order-insensitive value-hash -> CORRECTNESS_r{N}.json).
 All implementations live in ``mysql_clickhouse_replication_spark``;
 this module only adapts the registry to the driver's interface.
 
-Registration-order rotation
----------------------------
+Gate order
+----------
 The driver's correctness gate records only the FIRST 50 keys of the
-``queries()`` dict.  Every key is verified locally every round
-(tools/verify_local.py -> VERIFY_LOCAL_r{N}.json), but driver-recorded
-proof rotates through the registry in 50-key windows:
-
-* rounds 1-13 proved ALL 346 then-registered keys green (the
-  ``_DRIVER_GREEN`` list below is the union of green rows across
-  CORRECTNESS_r01..r13; round 8 closed the contract at 311/311,
-  rounds 9-13 kept it closed at 317/317, 323/323, 334/334, 340/340
-  and 346/346).
-* with coverage complete, the remaining contract risk is REGRESSION:
-  code and fixtures change under keys whose only driver proof is
-  rounds old.  ``_R14_FRONT`` holds the 46 keys whose NEWEST green
-  row is round 7 -- the stalest vintage cohort after r13's rotation
-  (newest-green histogram r7:46, r8-r13: 50 each), recomputed from
-  the r01..r13 union exactly as the r13 verdict prescribed ("rotate
-  the r14 driver window to the 46 r7-vintage keys").
-* the 4 keys first registered in round 14 (sim_ivfpq_residual,
-  sim_opq_alternate, docs_epoch_shuffle_resume, cdc_heartbeat -- not
-  in ``_DRIVER_GREEN``) have no driver proof at all, so they sort
-  FIRST; the 46 r7-vintage keys fill the window behind them
-  (4 + 46 = 50 exactly -- no fill from r8 needed).  After this round
-  records, no key's newest green predates round 8.  All window keys
-  were pre-flighted through tools/pandas_gate_sim.py +
-  tools/oracle_dtype_lint.py (PREFLIGHT_r14.txt) before this
-  ordering was committed, per the established hazard-gate
-  discipline.
+``queries()`` dict (every key is still verified locally each round by
+tools/verify_local.py).  So the order is computed from the committed
+gate proof, the ``CORRECTNESS_r<N>.json`` files beside this module:
+a key is green in round N when its row there has ``rows_match``,
+``schema_match`` and ``hash_match`` all true and an empty ``err``.
+Keys never green come first, in registration order; then every other
+key by its newest green round, oldest first, ties in registration
+order.  With no proof files the order is registration order.  Each
+round's window is therefore the stalest-proven cohort.
 """
 
 from __future__ import annotations
 
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from mysql_clickhouse_replication_spark import ORACLES, QUERIES, load_all
 
-# Union of driver-green keys across CORRECTNESS_r01..r10 (323).
-_DRIVER_GREEN = [
-    "agg_approx_distinct", "agg_approx_percentiles", "agg_array_topk",
-    "agg_bitmap_distinct", "agg_bool_family", "agg_collect",
-    "agg_conditional", "agg_count_distinct", "agg_countmin_prefilter",
-    "agg_cube", "agg_distinct_rows", "agg_exact_median",
-    "agg_exact_quantiles", "agg_exact_quantiles_bucketed",
-    "agg_groupby_multi", "agg_grouping_sets",
-    "agg_hash_global", "agg_heavy_hitters", "agg_histogram_quantile",
-    "agg_hll_mergeable", "agg_hll_overlap_estimate", "agg_linreg",
-    "agg_map_sum", "agg_mergeable_moments", "agg_minmax_by", "agg_mode",
-    "agg_percentiles", "agg_rollup", "agg_skew_salted", "agg_stats",
-    "agg_topk_weighted", "agg_weighted_avg", "agg_weighted_percentile",
-    "agg_wow_change", "analytics_rfm", "analytics_segment_migration",
-    "case_when", "cdc_apply_delete", "cdc_apply_upsert",
-    "cdc_backfill_plan", "cdc_batch_window",
-    "cdc_binlog_position_order", "cdc_checkpoint",
-    "cdc_collapsing_sign", "cdc_column_drift_stats",
-    "cdc_column_mask_policy", "cdc_compaction_ratio",
-    "cdc_conflict_lww", "cdc_ddl_apply", "cdc_ddl_route", "cdc_decode", "cdc_decode_sharded",
-    "cdc_dedup_bounded_window", "cdc_dedup_exact",
-    "cdc_dlq_replay_merge", "cdc_dlq_split", "cdc_filter_tables",
-    "cdc_freshness", "cdc_gap_check", "cdc_gtid_resume",
-    "cdc_incremental_agg", "cdc_lag_percentiles", "cdc_merge_into",
-    "cdc_minimal_image_reconstruct", "cdc_multi_table_route",
-    "cdc_order_violations", "cdc_partitioned_changelog_prune",
-    "cdc_pit_join", "cdc_replace_partition", "cdc_row_checksum",
-    "cdc_scd2_history", "cdc_schema_evolution",
-    "cdc_schema_registry_compat", "cdc_seq_coverage_ranges", "cdc_sink", "cdc_sink_idempotent",
-    "cdc_sink_wire", "cdc_snapshot", "cdc_snapshot_chunks",
-    "cdc_snapshot_diff", "cdc_snapshot_increment",
-    "cdc_snapshot_overlap_resolve", "cdc_stream_source",
-    "cdc_summing_merge", "cdc_tombstone_gc", "cdc_ttl_expiry",
-    "cdc_tx_batches", "cdc_type_cast", "cdc_type_edges",
-    "cdc_wide_row_reassemble", "dedup_cluster", "dedup_containment",
-    "dedup_embedding", "dedup_exact_text", "dedup_incremental",
-    "dedup_minhash", "dedup_minhash_accuracy", "dedup_ngram_jaccard",
-    "dedup_semantic_prune", "dedup_simhash", "dedup_source_matrix", "dedup_survivor_pick",
-    "docs_balanced_downsample", "docs_balanced_downsample_digest",
-    "docs_block_dedup",
-    "docs_chunk_overlap", "docs_contamination_check",
-    "docs_dedup_pipeline", "docs_language_balance",
-    "docs_length_mad_outliers", "docs_license_filter",
-    "docs_mix_weighted", "docs_ngram_coverage_eval",
-    "docs_novelty_ratio", "docs_pack_sequences",
-    "docs_perplexity_buckets", "docs_perplexity_buckets_nosort",
-    "docs_quality_filter_pipeline", "docs_quality_signals_gopher", "docs_repetition_ratio",
-    "docs_shard_balance", "docs_split_leakage_safe",
-    "docs_substring_dedup", "docs_temperature_sample", "docs_url_dedup",
-    "docs_vocab_growth", "embedding_hard_negatives",
-    "embedding_quantize", "events_ab_ztest", "events_alert_rules",
-    "events_anomaly_zscore", "events_attribution",
-    "events_audience_overlap", "events_bot_detection",
-    "events_changepoint_cusum", "events_cohort_ltv",
-    "events_conversion_latency", "events_counter_delta_sum",
-    "events_distribution_drift", "events_dormant_reactivation",
-    "events_ema_daily", "events_error_budget_burn", "events_funnel",
-    "events_funnel_by_segment", "events_funnel_strict",
-    "events_funnel_unordered", "events_funnel_window_sensitivity",
-    "events_gap_fill", "events_growth_accounting", "events_histogram",
-    "events_interval_coverage",
-    "events_m4_downsample", "events_markov_transitions", "events_new_vs_returning",
-    "events_peak_concurrency", "events_rate_limit_scan",
-    "events_record_highs", "events_retention",
-    "events_rolling_distinct", "events_rollup_hierarchy",
-    "events_seasonality", "events_sequence_match",
-    "events_session_duration", "events_sliding_batch",
-    "events_sliding_uniques_sketch", "events_streaks",
-    "events_time_weighted_avg", "events_top_paths",
-    "events_watermark_lateness", "events_watermark_lateness_sharded",
-    "filter_conjunctive",
-    "filter_in_between_like", "filter_null_semantics", "fn_array",
-    "fn_bitwise", "fn_business_days", "fn_date", "fn_encoding",
-    "fn_format", "fn_fuzzy_match", "fn_geo", "fn_hash", "fn_ip",
-    "fn_json", "fn_map", "fn_math", "fn_null_family", "fn_string",
-    "fn_struct", "fn_time_bucket", "fn_timezone", "fn_try_cast",
-    "fn_url", "fn_variant", "graph_pagerank", "graph_triangle_count",
-    "join_anti",
-    "join_anti_null_aware", "join_asof", "join_asof_nearest",
-    "join_asof_tolerance", "join_bloom_prefilter", "join_broadcast",
-    "join_bucketed_colocated", "join_cross",
-    "join_dynamic_partition_prune", "join_full_outer",
-    "join_inner_equi", "join_interval_overlap", "join_left_outer",
-    "join_multiway", "join_null_skew_split", "join_range_bucketed",
-    "join_semi", "join_skew_salted", "join_spatial_grid",
-    "join_theta_range", "limit_offset", "multimodal_decode",
-    "multimodal_dedup", "multimodal_framesample", "multimodal_join",
-    "orders_active_coverage", "orders_backlog_aging",
-    "orders_basket_lift", "orders_purchase_cadence",
-    "orders_revenue_concentration", "profile_skew", "profile_table",
-    "project_compute", "reshape_pivot", "reshape_pivot_multi",
-    "reshape_unpivot", "sample_hash_based",
-    "sample_importance_weighted", "sample_reservoir",
-    "sample_stratified", "scan_parquet", "scan_partition_filter",
-    "scan_projection_pushdown", "scan_sorted_layout_prune",
-    "scan_zorder_layout", "sessionize_batch", "set_except",
-    "set_intersect", "set_union_all", "set_union_distinct",
-    "sim_ann_lsh", "sim_ann_recall", "sim_centroid_classify",
-    "sim_centroid_drift", "sim_cosine_topk", "sim_hybrid_rrf",
-    "sim_ivf_nprobe_sweep", "sim_ivf_refine", "sim_knn_classify",
-    "sim_matryoshka_recall", "sim_pq_adc_search",
-    "sim_product_quantize", "sim_range_search", "sort_multi_key",
-    "source_csv_roundtrip", "source_json_roundtrip",
-    "source_orc_roundtrip", "source_parquet_schema_merge",
-    "stream_dedup", "stream_output_modes", "stream_resume_incremental",
-    "stream_session", "stream_sliding", "stream_stateful",
-    "stream_static_join", "stream_stream_join", "stream_triggers",
-    "stream_tumbling", "text_bm25_search", "text_collocations_pmi",
-    "text_entropy", "text_entropy_rate", "text_fingerprint",
-    "text_langid", "text_langid_eval", "text_lm_score",
-    "text_normalize", "text_pii_scrub", "text_quality", "text_stats",
-    "text_tfidf_terms", "text_token_count", "text_topn_ngrams",
-    "topk_global", "topk_per_group", "tpch_q10_shape", "tpch_q11_shape",
-    "tpch_q12_shape", "tpch_q13_shape", "tpch_q14_shape",
-    "tpch_q15_shape", "tpch_q16_shape", "tpch_q17_shape",
-    "tpch_q18_shape", "tpch_q19_shape", "tpch_q20_shape",
-    "tpch_q21_shape", "tpch_q22_shape", "tpch_q2_shape",
-    "tpch_q3_shape", "tpch_q4_shape", "tpch_q5_shape", "tpch_q6_shape",
-    "tpch_q7_shape", "tpch_q8_shape", "tpch_q9_shape",
-    "vector_group_rank", "win_analytic", "win_frame_range",
-    "win_frame_rows", "win_ignore_nulls", "win_ntile", "win_percent",
-    "win_ranking", "win_reset_running_sum", "win_time_range_frame",
-    "cdc_decode_multifile", "cdc_ttl_rollup", "docs_epoch_shuffle",
-    "embedding_gram_matrix", "embedding_pca_project",
-    "scan_bloom_skip_index", "scan_set_skip_index",
-    "sim_pca_power_iteration", "text_bpe_fertility",
-    "text_bpe_merge_step", "text_bpe_train_steps",
-    "scan_tokenbf_skip_index", "scan_projection_route",
-    "embedding_pca_topk", "sim_opq_rotate", "docs_epoch_shuffle_write",
-    "text_bpe_train_to_vocab",
-    "text_bpe_encode", "sim_ivfpq_search", "sim_opq_train",
-    "sim_ivfpq_search_trained", "docs_tokenize_pack",
-    "docs_epoch_shuffle_read"
-]
-
-# The 46 stalest driver greens for round 14: ALL keys whose newest
-# green row is round 7 (the stalest vintage after r13's rotation) --
-# recomputed from the r01..r13 union exactly as the r13 verdict
-# prescribed; sampled behind the 4 new r14 registrations (4 + 46 =
-# 50, a perfect window -- after this round records, no key's newest
-# green predates round 8).
-_R14_FRONT = [
-    "cdc_dedup_bounded_window", "cdc_dlq_replay_merge",
-    "cdc_dlq_split", "cdc_gap_check", "cdc_lag_percentiles",
-    "cdc_minimal_image_reconstruct", "cdc_multi_table_route",
-    "cdc_order_violations", "cdc_partitioned_changelog_prune",
-    "cdc_pit_join", "cdc_replace_partition", "cdc_sink_wire",
-    "cdc_snapshot_chunks", "cdc_tombstone_gc", "cdc_tx_batches",
-    "dedup_containment", "dedup_incremental",
-    "dedup_minhash_accuracy", "dedup_source_matrix",
-    "dedup_survivor_pick", "docs_dedup_pipeline",
-    "docs_language_balance", "docs_length_mad_outliers",
-    "docs_ngram_coverage_eval", "docs_novelty_ratio",
-    "docs_shard_balance", "docs_split_leakage_safe",
-    "docs_substring_dedup", "docs_url_dedup",
-    "docs_vocab_growth", "embedding_hard_negatives",
-    "sim_ann_recall", "sim_centroid_classify",
-    "sim_centroid_drift", "sim_hybrid_rrf",
-    "sim_ivf_nprobe_sweep", "sim_ivf_refine",
-    "sim_matryoshka_recall", "sim_pq_adc_search",
-    "sim_product_quantize", "text_bm25_search",
-    "text_collocations_pmi", "text_entropy_rate",
-    "text_langid_eval", "text_normalize", "text_topn_ngrams"
-]
+_PROOF_DIR = os.path.dirname(os.path.abspath(__file__))
 
 
-def _ordered_keys() -> list[str]:
-    """Never-driver-proven keys first (registration order), then the
-    stalest greens, then the remaining driver greens."""
-    proven = set(_DRIVER_GREEN)
-    unproven = [k for k in QUERIES if k not in proven]
-    front = [k for k in _R14_FRONT if k in QUERIES]
-    tail = [k for k in _DRIVER_GREEN
-            if k in QUERIES and k not in set(_R14_FRONT)]
-    return unproven + front + tail
+def _ordered_keys(proof_dir: str = _PROOF_DIR) -> list[str]:
+    """Registry keys in gate order (see the module docstring)."""
+    newest: dict[str, int] = {}
+    for name in os.listdir(proof_dir):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", name)
+        if m is None:
+            continue
+        with open(os.path.join(proof_dir, name)) as f:
+            rows = json.load(f)
+        rnd = int(m.group(1))
+        for key, row in rows.items():
+            if (
+                row.get("rows_match")
+                and row.get("schema_match")
+                and row.get("hash_match")
+                and not row.get("err")
+            ):
+                newest[key] = max(newest.get(key, 0), rnd)
+    # sorted() is stable, so ties keep registration order
+    return sorted(QUERIES, key=lambda k: newest.get(k, 0))
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -29,8 +29,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators._util import values_df
 from ..registry import register
-from ..session import scratch_path, session_memo_lookup, table
+from ..session import scratch_path, session_memo, table
 
 _CHUNK = 32  # tokens per chunk
 _STRIDE = 24  # chunk start spacing (overlap = _CHUNK - _STRIDE = 8)
@@ -2070,54 +2071,15 @@ def embedding_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _gram_cells(spark, sf_dir)
 
 
-# (session id, sf_dir) -> upper-triangle gram frame.  The distributed
-# X'X accumulation is the shared intermediate of embedding_gram_matrix
-# and sim_pca_power_iteration — a production pipeline computes the
-# gramian ONCE and every spectral consumer (PCA, whitening, OPQ) reads
-# it, so the keys share the persisted 2080-row frame the same way
-# (the _CLUSTER_MEMO discipline of functions/text.py).  The first
-# execution per session pays the honest corpus scan.
-_GRAM_MEMO: dict = {}
-
-
-def _plan_is_cached(spark: SparkSession, df: DataFrame) -> bool:
-    """True iff ``df``'s plan is still registered with the JVM cache
-    manager.  ``DataFrame.is_cached`` is a Python-local flag that never
-    observes ``spark.catalog.clearCache()``, so memo re-pin decisions
-    (r11 ADVICE #4) must ask the source of truth; any introspection
-    surprise answers False — re-persisting an already-cached frame is
-    a harmless no-op, silently losing the pin is not."""
-    try:
-        return (
-            not spark._jsparkSession.sharedState()
-            .cacheManager()
-            .lookupCachedData(df._jdf)
-            .isEmpty()
-        )
-    except Exception:
-        return False
-
-
+# The distributed X'X accumulation is the shared intermediate of
+# embedding_gram_matrix and sim_pca_power_iteration — a production
+# pipeline computes the gramian ONCE and every spectral consumer (PCA,
+# whitening, OPQ) reads it.
+@session_memo
 def _gram_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Lifetime: the persisted frame is d(d+1)/2 rows (2080 — bounded by
-    # the embedding dimension, never by N) and is returned lazily; the
-    # sweep/bench harness releases it via spark.catalog.clearCache()
-    # between keys (the repo-wide clearCache convention), and the memo
-    # entry dies with the SparkSession applicationId it is keyed on.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = session_memo_lookup(_GRAM_MEMO, key)
-    if hit is not None:
-        # The harness's clearCache() between keys drops the persist out
-        # from under a memo hit (r11 ADVICE #4): without re-pinning, the
-        # "computed once per session" sharing silently degrades to a full
-        # gram recomputation per downstream action.  The Python-side
-        # is_cached flag does NOT observe clearCache (it's a local bool),
-        # so eviction is detected via the JVM cache manager — a
-        # driver-side lookup, free per hit — and the frame re-persisted
-        # only when actually evicted.
-        if not _plan_is_cached(spark, hit):
-            hit.persist()
-        return hit
+    # The persisted frame is d(d+1)/2 rows (2080 — bounded by the
+    # embedding dimension, never by N); the harness's clearCache()
+    # between keys drops the persist and a memo hit re-pins it.
     e = table(spark, sf_dir, "embeddings")
     q = e.select(
         F.expr(
@@ -2135,7 +2097,7 @@ def _gram_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("t")
     )
-    out = (
+    return (
         pairs.select(
             F.col("t.i").cast("int").alias("i"),
             F.col("t.j").cast("int").alias("j"),
@@ -2145,8 +2107,6 @@ def _gram_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("p").alias("gram_fp"))
         .persist()
     )
-    _GRAM_MEMO[key] = out
-    return out
 
 
 #: Epoch-shuffle lattice-hash constants: odd multiplier (Knuth 2^32
@@ -2520,10 +2480,7 @@ def sim_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     (_py_guard_gmax) now fails at plan time instead of mid-job.  At
     100 TB: corpus scan once, then O(d^2) per step regardless of N."""
     rows = _py_pca_iter(spark, sf_dir)
-    return _local_rows(
-        spark, rows,
-        [("i", "INT"), ("comp_ppm", "BIGINT"), ("sgn", "INT")],
-    )
+    return values_df(spark, rows, "i int, comp_ppm bigint, sgn int")
 
 
 @register(
@@ -2760,13 +2717,9 @@ _PCA_TOPK_SELECT = "\nUNION ALL\n".join(
     for k in range(1, _PCA_TOPK + 1)
 )
 
-#: (applicationId, sf_dir) -> list of persisted emission frames
-#: (i, mag, sgn), one per component — shared with sim_opq_rotate the
-#: way _GRAM_MEMO shares the gram (re-pinned on hit via
-#: _plan_is_cached; each frame is d rows, never data-sized).
-_PCA_TOPK_MEMO: dict = {}
-
-
+# Shared with sim_opq_rotate the way _gram_cells shares the gram; each
+# emission frame is a d-row literal LocalRelation, never data-sized.
+@session_memo
 def _pca_topk_frames(
     spark: SparkSession, sf_dir: str, n: int = _PCA_TOPK
 ) -> list[DataFrame]:
@@ -2774,14 +2727,6 @@ def _pca_topk_frames(
     iteration — Spark twin of _pca_topk_ctes, formula-for-formula.
     Default n=3 (the family's shared basis); n=4 adds the next
     deflated direction for sim_opq_alternate's candidate set."""
-    key = (spark.sparkContext.applicationId, sf_dir, n)
-    hit = session_memo_lookup(_PCA_TOPK_MEMO, key)
-    if hit is not None:
-        # The emission frames are literal LocalRelations (no RDD blocks,
-        # no catalog-cache entries), so unlike the gram memo there is
-        # nothing for clearCache() to evict and nothing to re-pin — a
-        # hit is always directly reusable.
-        return hit
     # PLAN-TIME EXACT ITERATION (r14 optimization, guide §1.2/§5): the
     # distributed, data-sized work is the shared memoized _gram_cells
     # corpus pass; everything after it is O(d^2) state — 2080 gram
@@ -2844,16 +2789,10 @@ def _pca_topk_frames(
              -1 if w[i] < 0 else (1 if w[i] > 0 else 0))
             for i in dims
         ]
-        frames.append(
-            _local_rows(
-                spark, nm,
-                [("i", "INT"), ("mag", "BIGINT"), ("sgn", "INT")],
-            )
-        )
+        frames.append(values_df(spark, nm, "i int, mag bigint, sgn int"))
         ck = {i: sgn * (mag // 10) for i, mag, sgn in nm}
         cdk = max(sum(c * c for c in ck.values()), 1)
         bases.append((ck, cdk))
-    _PCA_TOPK_MEMO[key] = frames
     return frames
 
 
@@ -3199,24 +3138,6 @@ def _opq_rot_frame(spark: SparkSession, hws: list[tuple[dict, int]]) -> DataFram
     return _local_1row_sql(spark, ", ".join(parts))
 
 
-def _local_rows(
-    spark: SparkSession, rows: list[tuple], cols: list[tuple]
-) -> DataFrame:
-    """Bounded plan-time rows as a TRUE LocalRelation (VALUES + a
-    foldable cast projection).  createDataFrame(list) is RDD-backed —
-    every collect/broadcast/materialization of it schedules a
-    defaultParallelism-sliced micro-job (measured ~1 s per frame on
-    local[32]); a LocalRelation's executeCollect is driver-side and
-    its BroadcastExchange builds without launching a job.  ``cols`` is
-    [(name, sql_type)]; values must be ints."""
-    vals = ", ".join(
-        "(" + ", ".join(str(int(x)) for x in r) + ")" for r in rows
-    )
-    names = ", ".join(n for n, _ in cols)
-    sel = ", ".join(f"CAST({n} AS {t}) AS {n}" for n, t in cols)
-    return spark.sql(f"SELECT {sel} FROM (VALUES {vals}) AS t({names})")
-
-
 def _local_1row_sql(spark: SparkSession, select_sql: str) -> DataFrame:
     """One literal row from a foldable SELECT-expression STRING — a
     projection over a VALUES LocalRelation, folded to a plain
@@ -3314,11 +3235,7 @@ def _opq_fixed_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (applicationId, abspath(sf_dir)) -> (both, cents, out) lazy frames —
-#: see _opq_spaces.  Plans, never rows.
-_OPQ_SPACES_MEMO: dict = {}
-
-
+@session_memo
 def _opq_spaces(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -3337,24 +3254,14 @@ def _opq_spaces(
     sim_ivfpq_search adds IVF routing and ADC search on top of the
     same frames.
 
-    The returned triple is memoized per (applicationId, sf_dir) — the
-    table()-memo discipline (r15): every frame is an UNEVALUATED lazy
-    plan over the memoized parquet scan, no rows are cached, and every
-    action still reads parquet.  What the memo removes is per-call
-    driver work the SIX family consumers each re-paid INSIDE the bench
-    timed region: the 3 bounded d-row basis collects (3 scheduled jobs)
-    plus ~0.3-0.4 s of py4j/analysis round trips rebuilding identical
-    plans (cProfile: ~1,600 JVM commands per construction, ~90 % of
-    warm construction wall)."""
-    memo_key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-    )
-    hit = session_memo_lookup(_OPQ_SPACES_MEMO, memo_key)
-    if hit is not None:
-        # Lazy plans only (nothing persisted/checkpointed): directly
-        # reusable, nothing to re-pin.
-        return hit
+    The returned triple is memoized per session — every frame is an
+    UNEVALUATED lazy plan over the memoized parquet scan, no rows are
+    cached, and every action still reads parquet.  What the memo
+    removes is per-call driver work the SIX family consumers each
+    re-paid INSIDE the bench timed region: the 3 bounded d-row basis
+    collects (3 scheduled jobs) plus ~0.3-0.4 s of py4j/analysis round
+    trips rebuilding identical plans (cProfile: ~1,600 JVM commands per
+    construction, ~90 % of warm construction wall)."""
     frames = _pca_topk_frames(spark, sf_dir)
     basis = _collect_basis_vecs(frames)  # d rows x 3 frames, bounded
     rot = _opq_rot_frame(spark, _py_chain_hws(basis))
@@ -3407,7 +3314,6 @@ def _opq_spaces(
                 f" c -> named_struct('d', {dist}, 'k', c.cid))) AS {tag}b{m}"
             )
     out = both.crossJoin(F.broadcast(cents)).selectExpr("*", *argmins)
-    _OPQ_SPACES_MEMO[memo_key] = (both, cents, out)
     return both, cents, out
 
 
@@ -3498,25 +3404,14 @@ def _ivfpq_search_ctes() -> str:
     return ",\n".join(parts)
 
 
-#: (applicationId, abspath(sf_dir)) -> lazy shared frames of the fused
-#: search keys (ivfc broadcast source / exact ground-truth plan) — the
-#: _OPQ_SPACES_MEMO discipline: plans, never rows; both inputs are
-#: themselves memo-stable per (applicationId, sf_dir), so the key is
-#: sound.
-_IVFC_MEMO: dict = {}
-_IVFPQ_EXACT_MEMO: dict = {}
-
-
-def _ivf_centroids_frame(
-    spark: SparkSession, sf_dir: str, both: DataFrame
-) -> DataFrame:
+# Shared frames of the fused search keys, built over the memoized
+# _opq_spaces corpus.
+@session_memo
+def _ivf_centroids_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-row frame holding the sorted {_IVFPQ_C}-entry IVF centroid
     array (plain-space vectors of vec_id < C) — the broadcast every
     routing pass scores against."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    hit = session_memo_lookup(_IVFC_MEMO, key)
-    if hit is not None:
-        return hit
+    both = _opq_spaces(spark, sf_dir)[0]
     ivfc_plan = both.filter(F.col("vec_id") < _IVFPQ_C).agg(
         F.array_sort(
             F.collect_list(
@@ -3531,26 +3426,20 @@ def _ivf_centroids_frame(
     # materialization (a production IVF index trains its centroids
     # once; queries never re-derive them).
     crow = ivfc_plan.collect()[0]
-    ivfc = _local_1row_sql(spark, f"{_cents_sql(crow['ivfc'])} AS ivfc")
-    _IVFC_MEMO[key] = ivfc
-    return ivfc
+    return _local_1row_sql(spark, f"{_cents_sql(crow['ivfc'])} AS ivfc")
 
 
-def _ivfpq_exact_topk(
-    spark: SparkSession, sf_dir: str, both: DataFrame
-) -> DataFrame:
+@session_memo
+def _ivfpq_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact brute-force integer-L2 top-k per query — the recall ground
     truth shared by the fused search keys (one corpus pass under a
     10-row broadcast)."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    hit = session_memo_lookup(_IVFPQ_EXACT_MEMO, key)
-    if hit is not None:
-        return hit
+    both = _opq_spaces(spark, sf_dir)[0]
     qv = both.filter(F.col("vec_id") < _IVFPQ_Q).select(
         F.col("vec_id").alias("q_id"), F.col("pe").alias("qe")
     )
     we = Window.partitionBy("q_id").orderBy(F.asc("d"), F.asc("vec_id"))
-    exact = (
+    return (
         both.crossJoin(F.broadcast(qv))
         .filter(F.col("vec_id") != F.col("q_id"))
         .select("q_id", "vec_id", F.expr(_opq_sqd("pe", "qe")).alias("d"))
@@ -3558,8 +3447,6 @@ def _ivfpq_exact_topk(
         .filter(F.col("rn") <= _IVFPQ_TOPK)
         .select("q_id", "vec_id")
     )
-    _IVFPQ_EXACT_MEMO[key] = exact
-    return exact
 
 
 _IVFPQ_SELECT = """
@@ -3621,7 +3508,7 @@ def sim_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact pass over a monitoring window."""
     both, cents, out = _opq_spaces(spark, sf_dir)
     d_q = _opq_sqd("pe", "c.cv")
-    ivfc = _ivf_centroids_frame(spark, sf_dir, both)
+    ivfc = _ivf_centroids_frame(spark, sf_dir)
     # coded corpus + its IVF cell: ONE map pass over `out`
     coded = out.crossJoin(F.broadcast(ivfc)).select(
         "vec_id",
@@ -3692,7 +3579,7 @@ def sim_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             | (F.col("rn_plain") <= _IVFPQ_TOPK)
         )
     )
-    exact5 = _ivfpq_exact_topk(spark, sf_dir, both)
+    exact5 = _ivfpq_exact_topk(spark, sf_dir)
     # ranked is <= queries x 2k rows — broadcast the recall join so the
     # two bounded frames never sort-merge
     return (
@@ -3839,13 +3726,10 @@ def sim_opq_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-#: (applicationId, sf_dir) -> (per-round surface frames, final trained
-#: codebook frame).  Trained ONCE per session — the _BPE_MEMO
-#: discipline: the trajectory surface (sim_opq_train) and the trained
-#: search (sim_ivfpq_search_trained) read the same checkpointed state.
-_OPQ_TRAIN_MEMO: dict = {}
-
-
+# Trained ONCE per session, as _bpe_train is: the trajectory surface
+# (sim_opq_train) and the trained search (sim_ivfpq_search_trained)
+# read the same state.
+@session_memo
 def _opq_train_state(
     spark: SparkSession, sf_dir: str
 ) -> tuple[list[DataFrame], dict]:
@@ -3855,10 +3739,6 @@ def _opq_train_state(
     codebook, 32 bounded entries — rendered back into plans via
     _opq_cball_lit).  Semantics and plan shape documented on
     sim_opq_train."""
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    hit = session_memo_lookup(_OPQ_TRAIN_MEMO, memo_key)
-    if hit is not None:
-        return hit
     both, cents, _ = _opq_spaces(spark, sf_dir)
     dd = _OPQ_D
     # DRIVER-HELD CODEBOOK BETWEEN ROUNDS (r14 optimization, guide
@@ -3942,10 +3822,9 @@ def _opq_train_state(
                  len({cid for cid, _sd in d0}))
             )
         out_rounds.append(
-            _local_rows(
+            values_df(
                 spark, surf,
-                [("round", "INT"), ("m", "INT"),
-                 ("distortion", "BIGINT"), ("n_cells_used", "BIGINT")],
+                "round int, m int, distortion bigint, n_cells_used bigint",
             )
         )
         means: dict = {}
@@ -3956,7 +3835,6 @@ def _opq_train_state(
                   if (v := means.get(key)) is not None else sv)
             for key, sv in cb.items()
         }
-    _OPQ_TRAIN_MEMO[memo_key] = (out_rounds, cb)
     return out_rounds, cb
 
 
@@ -4070,7 +3948,7 @@ def sim_ivfpq_search_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     dd = _OPQ_D
     cb1 = _opq_cball_lit(spark, cb)  # driver-held codebook, literal
     d_q = _opq_sqd("pe", "c.cv")
-    ivfc = _ivf_centroids_frame(spark, sf_dir, both)
+    ivfc = _ivf_centroids_frame(spark, sf_dir)
 
     def trained_argmin(m: int) -> str:
         return (
@@ -4162,7 +4040,7 @@ def sim_ivfpq_search_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
             | (F.col("rn_init") <= _IVFPQ_TOPK)
         )
     )
-    exact5 = _ivfpq_exact_topk(spark, sf_dir, both)
+    exact5 = _ivfpq_exact_topk(spark, sf_dir)
     return (
         exact5.join(F.broadcast(ranked), ["q_id", "vec_id"], "left")
         .groupBy("q_id")
@@ -4608,7 +4486,7 @@ def sim_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     a factor nprobe to the (tiny) per-query constant, nothing to the
     corpus cost.  At 100 TB: one scan + broadcast probes, unchanged."""
     both, cents, out = _opq_spaces(spark, sf_dir)
-    ivfc = _ivf_centroids_frame(spark, sf_dir, both)
+    ivfc = _ivf_centroids_frame(spark, sf_dir)
     d_q = _opq_sqd("pe", "c.cv")
     dd = _OPQ_D
     cell_expr = (
@@ -4744,7 +4622,7 @@ def sim_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
             | (F.col("rn_plain") <= _IVFPQ_TOPK)
         )
     )
-    exact5 = _ivfpq_exact_topk(spark, sf_dir, both)
+    exact5 = _ivfpq_exact_topk(spark, sf_dir)
     return (
         exact5.join(F.broadcast(ranked), ["q_id", "vec_id"], "left")
         .groupBy("q_id")

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..operators._util import values_df
 from ..registry import register
-from ..session import session_memo_lookup, table
+from ..session import session_memo, table
 from .vectors import _cos, _vecs
 
 # BPE-ish tokenizer: letter chunks (<=4 chars, BPE-like subwords), digit
@@ -1496,16 +1496,10 @@ def text_bpe_train_to_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-# (session id, sf_dir, rounds) -> (step_rows, pairs) of the trained
-# tokenizer.  A production pipeline trains ONCE and every consumer
-# (the trajectory surface, the corpus encoder, fertility audits) reads
-# the same checkpointed merge table — the _GRAM_MEMO discipline of
-# functions/pipeline.py applied to the BPE state.  localCheckpoint
-# frames are not subject to clearCache, so no re-pin logic is needed;
-# entries die with the SparkSession applicationId they are keyed on.
-_BPE_MEMO: dict = {}
-
-
+# A production pipeline trains ONCE and every consumer (the trajectory
+# surface, the corpus encoder, fertility audits) reads the same
+# checkpointed merge table.
+@session_memo
 def _bpe_train(
     spark: SparkSession, sf_dir: str, rounds: int
 ) -> tuple[list[DataFrame], list]:
@@ -1534,10 +1528,6 @@ def _bpe_train(
     expansion over the collected pairs is exact Python str.replace
     (both engines' replace() is the same non-overlapping left-to-right
     scan, pinned by the bruteforce property tests)."""
-    memo_key = (spark.sparkContext.applicationId, sf_dir, rounds)
-    hit = session_memo_lookup(_BPE_MEMO, memo_key)
-    if hit is not None:
-        return hit
     d = table(spark, sf_dir, "documents")
     cur = (
         d.select(F.explode(F.split(F.lower("text"), "[^a-z]+")).alias("w"))
@@ -1598,7 +1588,6 @@ def _bpe_train(
         )
         merges_py.append(tok)
         cur = nxt
-    _BPE_MEMO[memo_key] = (step_rows, enc_pairs)
     return step_rows, enc_pairs
 
 
@@ -1694,7 +1683,7 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     audits words of length >= 2 only).
 
     Scale: training state comes from the memoized _bpe_train (computed
-    once per session, checkpointed per round — the _GRAM_MEMO
+    once per session, checkpointed per round — the _gram_cells
     discipline); the merge table enters as K foldable pair literals
     (r14; production's V-entry table is a vocab-sized broadcast join —
     at K=10 the broadcast machinery cost more than the pairs), and the

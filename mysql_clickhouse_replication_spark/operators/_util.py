@@ -259,9 +259,9 @@ def values_df(spark, rows, schema: str):
     sliced micro-job (measured ~0.1-1 s per frame on local[32], and a
     scheduler round-trip per job on a real cluster), while a
     LocalRelation collects driver-side and broadcasts without launching
-    a job (the r14 ``_local_rows`` discipline, generalized to string/
-    array/timestamp columns).  ``schema`` is the same "name type, ..."
-    DDL string createDataFrame took, so call sites swap 1:1."""
+    a job; string/array/timestamp columns work as well as ints.
+    ``schema`` is the same "name type, ..." DDL string createDataFrame
+    took, so call sites swap 1:1."""
     cols: list[str] = []
     depth, cur = 0, ""
     for ch in schema:

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..session import scratch_path, session_memo_lookup, table
+from ..session import scratch_path, session_memo, table
 from ._util import D12, banded_row_number, ntile_from_rank, values_df
 
 
@@ -2810,35 +2810,19 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (applicationId, abspath(sf_dir), threshold) -> bool — the fixture is
-#: immutable per session and the count is metadata-only, but it still
-#: scheduled a job per query CONSTRUCTION (twice per bench run pair);
-#: memoized per the session table()-memo discipline (r15).
-_DEG_BCAST_MEMO: dict = {}
-
-
-def _degree_frame_broadcastable(spark: SparkSession, sf_dir: str) -> bool:
+# Memoized: the count is metadata-only, but it still scheduled a job
+# per query CONSTRUCTION.
+@session_memo
+def _degree_frame_broadcastable(
+    spark: SparkSession, sf_dir: str, raw: str
+) -> bool:
     """Is graph_triangle_count's |V|-row degree frame safely below the
-    session's autoBroadcastJoinThreshold?  Upper bound |V| by |part|
-    (nodes ARE part keys) via a metadata-only parquet count, estimate
-    64 B/row (two BIGINTs + UnsafeRow/HashedRelation overhead), and
-    require the estimate to fit the threshold; a disabled threshold
-    (-1) or any parse surprise answers False (shuffle join — the
-    always-safe path)."""
-    raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    memo_key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        raw,
-    )
-    hit = session_memo_lookup(_DEG_BCAST_MEMO, memo_key)
-    if hit is not None:
-        return hit
-    _DEG_BCAST_MEMO[memo_key] = out = _degree_bcast_uncached(spark, sf_dir, raw)
-    return out
-
-
-def _degree_bcast_uncached(spark: SparkSession, sf_dir: str, raw: str) -> bool:
+    autoBroadcastJoinThreshold ``raw`` (the session conf's string)?
+    Upper bound |V| by |part| (nodes ARE part keys) via a metadata-only
+    parquet count, estimate 64 B/row (two BIGINTs + UnsafeRow/
+    HashedRelation overhead), and require the estimate to fit the
+    threshold; a disabled threshold (-1) or any parse surprise answers
+    False (shuffle join — the always-safe path)."""
     try:
         thresh = int(raw)
     except ValueError:
@@ -2942,7 +2926,11 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     hint = (
         F.broadcast
-        if _degree_frame_broadcastable(spark, sf_dir)
+        if _degree_frame_broadcastable(
+            spark,
+            sf_dir,
+            spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760"),
+        )
         else (lambda df: df)
     )
     op3 = (

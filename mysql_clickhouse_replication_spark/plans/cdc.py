@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 import os
 
 from ..registry import register
-from ..session import scratch_path, table
+from ..session import scratch_path, session_memo, table
 
 # Shared decode: events fixture -> normalized changelog.
 # Oracle twin of _changelog() — keep the two in lockstep.
@@ -763,9 +763,19 @@ def cdc_snapshot_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, sf_dir) -> written partitioned-landing path; the
-# landing is a standing table in production, written once per session.
-_PRUNE_LANDING: dict = {}
+def _write_landing(spark: SparkSession, sf_dir: str, path: str) -> None:
+    cl = _changelog(spark, sf_dir).withColumn("day", F.to_date("ts"))
+    cl.write.mode("overwrite").partitionBy("tbl", "day").parquet(path)
+
+
+# The landing is a standing table in production, written once per
+# session.  The source mtime is an argument so a regenerated fixture
+# within one session invalidates the landing (r5 advice).
+@session_memo
+def _prune_landing(spark: SparkSession, sf_dir: str, src_mtime: int) -> str:
+    path = scratch_path("cdc_part_prune", os.path.basename(sf_dir))
+    _write_landing(spark, sf_dir, path)
+    return path
 
 
 @register(
@@ -804,31 +814,20 @@ def cdc_partitioned_changelog_prune(spark: SparkSession, sf_dir: str) -> DataFra
     reused — production's landing is a standing table; re-writing ~120
     partition directories per query call measured filesystem setup,
     not the pruned-compaction plan this key claims."""
-    # memo key carries the source fixture's mtime so a regenerated
-    # fixture within one session invalidates the landing (r5 advice)
     src_mtime = int(os.stat(os.path.join(sf_dir, "events.parquet")).st_mtime_ns)
-    key = (spark.sparkContext.applicationId, sf_dir, src_mtime)
-
-    def _land() -> str:
-        cl = _changelog(spark, sf_dir).withColumn("day", F.to_date("ts"))
-        s = scratch_path("cdc_part_prune", os.path.basename(sf_dir))
-        cl.write.mode("overwrite").partitionBy("tbl", "day").parquet(s)
-        _PRUNE_LANDING[key] = s
-        return s
-
-    sink = _PRUNE_LANDING.get(key)
+    sink = _prune_landing(spark, sf_dir, src_mtime)
     # existence re-check: scratch_path prunes sibling dirs older than
     # 2 h, so another process can collect this session's landing from
     # under a very long-lived memo — rewrite rather than fail the read
-    if sink is None or not os.path.isdir(sink):
-        sink = _land()
+    if not os.path.isdir(sink):
+        _write_landing(spark, sf_dir, sink)
     try:
         rb = spark.read.parquet(sink)
     except Exception:
         # the isdir check raced the age-based scratch prune (TOCTOU,
         # r5 advice): rewrite once and re-read — a freshly written
         # landing is immune to the 2 h prune for this query's lifetime
-        sink = _land()
+        _write_landing(spark, sf_dir, sink)
         rb = spark.read.parquet(sink)
     pruned = rb.filter(
         (F.col("tbl") == "t1")

@@ -10,10 +10,35 @@ Scale notes (100 TB design intent, tested on local[32]):
 * Session timezone pinned to UTC: fixtures carry naive timestamps and the
   DuckDB oracle is UTC-naive; any other TZ silently shifts values.
 * Arrow enabled for the (rare) pandas-UDF paths.
+
+Session memos
+-------------
+Cross-call state lives in exactly one primitive, ``session_memo``, and
+every memo it creates is listed in ``MEMOS``.  The contract:
+
+* Key: ``(applicationId, abspath(sf_dir), *rest)`` where ``rest`` is the
+  decorated function's remaining arguments, defaults applied.  Nothing
+  else may vary the result, so a DataFrame is never an argument.
+* Stored values: lazy plans (possibly over localCheckpoint-ed bounded
+  state), frames the memoized function persisted (no float or double
+  column), and bounded trained state held in Python as ``int``/``bool``/
+  ``str``/``None`` leaves inside tuples, lists and dicts -- never a
+  float, never a query result.  tests/test_edges.py::test_memo_boundary
+  sweeps ``MEMOS`` to enforce it.
+* Eviction: any call drops every entry of a different applicationId and
+  best-effort unpersists the frames it had pinned; a restarted session
+  rebuilds from scratch.
+* Re-pin: a frame that was persisted when stored is re-persisted on a hit
+  if ``spark.catalog.clearCache()`` has dropped it; frames that were not
+  persisted are returned as they are, with no JVM lookup.
+* Cap: ``cap=n`` keeps at most ``n`` entries, dropping (and unpersisting)
+  the oldest first.
 """
 
 from __future__ import annotations
 
+import functools
+import inspect
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -59,24 +84,6 @@ def get_spark(app_name: str = "mysql_clickhouse_replication_spark") -> SparkSess
     return spark
 
 
-def session_memo_lookup(memo: dict, key: tuple):
-    """Lookup in an (applicationId, ...)-keyed module memo, first
-    evicting every entry whose applicationId differs from ``key[0]``
-    (r13 ADVICE): a restarted SparkSession invalidates the cached /
-    localCheckpoint-ed frames old entries pin, so a long-lived process
-    must not leak DataFrame references to dead sessions' RDDs.  All
-    memos key by applicationId FIRST; capping the dict to the live
-    session keeps it O(#sf_dirs) instead of O(#sessions x #sf_dirs)."""
-    app_id = key[0]
-    for stale in [k for k in memo if k[0] != app_id]:
-        old = memo.pop(stale)
-        try:  # cached (not checkpointed) entries may still be unpersistable
-            old.unpersist()
-        except Exception:
-            pass
-    return memo.get(key)
-
-
 def scratch_path(*parts: str, unique: bool = True) -> str:
     """Scratch path for sink/checkpoint dirs under <repo>/.scratch.
 
@@ -110,24 +117,92 @@ def scratch_path(*parts: str, unique: bool = True) -> str:
     return os.path.join(repo, ".scratch", *parts, *leaf)
 
 
-#: (applicationId, abspath(sf_dir), table) -> lazy scan DataFrame.  A
-#: DataFrame here is an UNEVALUATED plan — no rows are cached; every
-#: action still reads the parquet files.  What the memo removes is the
-#: driver-side cost of re-creating the relation on every ``table()``
-#: call: file listing (InMemoryFileIndex) + footer schema inference +
-#: py4j round trips, measured at 0.1-0.6 s per call on the bench box
-#: and paid INSIDE the timed region by every query construction.  At
-#: 100 TB the same cost is the guide's §6 "file listing of heavily
-#: partitioned tables" driver bottleneck — re-listing a large table per
-#: query construction is pure waste; the fixture dirs are immutable for
-#: the life of a session, and the memo is keyed by applicationId so a
-#: restarted session re-lists from scratch.
-_TABLE_MEMO: dict = {}
+#: memo name ("module.qualname") -> {key: (value, pinned frames)}.
+MEMOS: dict[str, dict] = {}
 
 
+def _plan_is_cached(spark: SparkSession, df: DataFrame) -> bool:
+    """True iff ``df``'s plan is still registered with the JVM cache
+    manager.  ``DataFrame.is_cached`` is a Python-local flag that never
+    observes ``spark.catalog.clearCache()``, so re-pin decisions must
+    ask the source of truth; any introspection surprise answers False --
+    re-persisting an already-cached frame is a harmless no-op, silently
+    losing the pin is not."""
+    try:
+        return (
+            not spark._jsparkSession.sharedState()
+            .cacheManager()
+            .lookupCachedData(df._jdf)
+            .isEmpty()
+        )
+    except Exception:
+        return False
+
+
+def _frames(value):
+    """Every DataFrame inside a memo value (nested tuples and lists)."""
+    if isinstance(value, DataFrame):
+        yield value
+    elif isinstance(value, (tuple, list)):
+        for v in value:
+            yield from _frames(v)
+
+
+def _release(entry) -> None:
+    for df in entry[1]:
+        try:  # the owning session may already be stopped
+            df.unpersist()
+        except Exception:
+            pass
+
+
+def session_memo(fn=None, *, cap: int | None = None):
+    """Memoize ``fn(spark, sf_dir, *rest)`` per live session under the
+    contract in the module docstring.  Use as ``@session_memo`` or
+    ``@session_memo(cap=n)``."""
+
+    def wrap(fn):
+        sig = inspect.signature(fn)
+        store: dict = {}
+        MEMOS[f"{fn.__module__}.{fn.__qualname__}"] = store
+
+        @functools.wraps(fn)
+        def memoized(spark, sf_dir, *args, **kwargs):
+            bound = sig.bind(spark, sf_dir, *args, **kwargs)
+            bound.apply_defaults()
+            app = spark.sparkContext.applicationId
+            rest = tuple(bound.arguments.values())[2:]
+            key = (app, os.path.abspath(sf_dir), *rest)
+            for stale in [k for k in store if k[0] != app]:
+                _release(store.pop(stale))
+            hit = store.get(key)
+            if hit is not None:
+                for df in hit[1]:  # re-pin what clearCache() dropped
+                    if not _plan_is_cached(spark, df):
+                        df.persist()
+                return hit[0]
+            value = fn(spark, sf_dir, *args, **kwargs)
+            while cap is not None and len(store) >= cap:
+                _release(store.pop(next(iter(store))))
+            store[key] = (value, tuple(d for d in _frames(value) if d.is_cached))
+            return value
+
+        memoized.memo = store
+        return memoized
+
+    return wrap if fn is None else wrap(fn)
+
+
+@session_memo
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table (parquet scan; Catalyst prunes columns and
     pushes predicates into the row-group reader — see scan_* operators).
+
+    Memoized because the fixture dirs are immutable for the life of a
+    session: the lazy scan holds no rows, and every action still reads
+    the parquet files, but re-creating the relation (file listing +
+    footer schema inference + py4j round trips, 0.1-0.6 s per call on
+    the bench box) would otherwise be paid by every query construction.
 
     ``events.ts`` has shipped as both parquet TIMESTAMP(NANOS) (early
     fixture generations) and TIMESTAMP(MICROS) (current).  Spark 4
@@ -138,22 +213,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Python fetch does, so oracle hashes agree — while a native
     timestamp passes through untouched.
     """
-    if os.environ.get("SPARK_GRAFT_TABLE_MEMO", "1") != "0":
-        key = (
-            spark.sparkContext.applicationId,
-            os.path.abspath(sf_dir),
-            name,
-        )
-        hit = session_memo_lookup(_TABLE_MEMO, key)
-        if hit is not None:
-            return hit
-        df = _read_table(spark, sf_dir, name)
-        _TABLE_MEMO[key] = df
-        return df
-    return _read_table(spark, sf_dir, name)
-
-
-def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         from pyspark.sql import functions as F

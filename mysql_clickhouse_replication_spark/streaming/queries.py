@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..session import table
+from ..session import session_memo, table
 
 _REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -49,10 +49,12 @@ def _scratch(*parts: str) -> str:
     return scratch_path(*parts, unique=False)
 
 
-#: fixture schemas are immutable within a session; memoizing saves one
-#: batch footer-read per STREAMING KEY in multi-key sweeps (part of the
-#: r8-prescribed shared session-scoped setup).
-_EVENTS_SCHEMA_CACHE: dict[str, object] = {}
+# The raw (undecoded) events scan, whose schema the stream source
+# needs; memoized to save one batch footer-read per STREAMING KEY in
+# multi-key sweeps.
+@session_memo
+def _events_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return spark.read.parquet(f"{sf_dir}/events.parquet")
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -64,10 +66,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import LongType
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = _EVENTS_SCHEMA_CACHE.get(sf_dir)
-    if raw_schema is None:
-        raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-        _EVENTS_SCHEMA_CACHE[sf_dir] = raw_schema
+    raw_schema = _events_raw(spark, sf_dir).schema
     sdf = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "events.parquet")

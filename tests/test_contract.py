@@ -292,3 +292,87 @@ def test_survey_and_operators_counts_match_registry():
         ops = f.read()
     m2 = re.search(r"\b(\d+) keys\b", ops)
     assert m2 and int(m2.group(1)) == n, (m2 and m2.group(1), n)
+
+
+def test_no_module_memo_outside_session():
+    """Cross-call state has one home: session.session_memo.  No other
+    package module may define a module-level memo (an empty dict/set
+    filled at runtime, or an lru_cache/cache decorator); registry.py's
+    key registry is the one exemption."""
+    import glob
+    import os
+    import re
+
+    pkg = os.path.join(
+        os.path.dirname(__file__), os.pardir,
+        "mysql_clickhouse_replication_spark",
+    )
+    empty = re.compile(r"^(\w+)\s*(:[^=]*)?=\s*(\{\}|dict\(\)|set\(\))\s*$")
+    decorator = re.compile(r"^\s*@(functools\.)?(lru_cache|cache)\b")
+    allowed = {("registry.py", "QUERIES"), ("registry.py", "ORACLES")}
+    found = []
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, pkg)
+        if rel == "session.py":
+            continue
+        for i, ln in enumerate(open(path), start=1):
+            m = empty.match(ln)
+            if (m and (rel, m.group(1)) not in allowed) or decorator.match(ln):
+                found.append(f"{rel}:{i}: {ln.strip()}")
+    assert not found, "\n".join(found)
+
+
+def _write_proof(d, rnd, rows):
+    import json
+
+    (d / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(rows))
+
+
+def test_gate_order_from_proof_files(tmp_path):
+    """The gate order is computed from CORRECTNESS_r*.json: keys
+    never green first (registration order), then by oldest newest-green
+    round, ties in registration order.  A row is green only with all
+    three matches true and an empty err.  No files: registration order."""
+    from mysql_clickhouse_replication_spark import QUERIES
+
+    e.load_all()
+    reg = list(QUERIES)
+    assert e._ordered_keys(str(tmp_path)) == reg
+
+    a, b, c, d = reg[:4]
+    green = {"rows_match": True, "schema_match": True, "hash_match": True,
+             "err": None}
+    _write_proof(tmp_path, 1, {k: green for k in (a, b, c, d)})
+    _write_proof(tmp_path, 2, {
+        a: green,
+        b: {**green, "hash_match": False},
+        c: {**green, "err": "boom"},
+    })
+    (tmp_path / "CORRECTNESS_r03_notes.json").write_text("not a proof file")
+    assert e._ordered_keys(str(tmp_path)) == reg[4:] + [b, c, d, a]
+
+
+def test_gate_window_is_stalest_cohort():
+    """The committed proof files put the stalest-proven cohort in the
+    gate's 50-key window: no key outside the window has an older
+    newest-green round than any key inside it."""
+    import json
+    import os
+    import re
+
+    root = os.path.dirname(os.path.abspath(e.__file__))
+    newest: dict[str, int] = {}
+    for name in os.listdir(root):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", name)
+        if m:
+            for k, row in json.load(open(os.path.join(root, name))).items():
+                if (row["rows_match"] and row["schema_match"]
+                        and row["hash_match"] and not row["err"]):
+                    newest[k] = max(newest.get(k, 0), int(m.group(1)))
+    assert newest, "no committed proof files"
+    order = list(e.queries())
+    window, rest = order[:50], order[50:]
+    assert max(newest.get(k, 0) for k in window) <= min(
+        newest.get(k, 0) for k in rest
+    )
+    assert list(e.oracle_sql())[:50] == window

@@ -802,8 +802,8 @@ def test_gram_memo_repersists_after_clearcache(spark, sf_dir):
     action."""
     from mysql_clickhouse_replication_spark.functions.pipeline import (
         _gram_cells,
-        _plan_is_cached,
     )
+    from mysql_clickhouse_replication_spark.session import _plan_is_cached
 
     first = _gram_cells(spark, sf_dir)
     first.count()
@@ -1597,33 +1597,155 @@ def test_opq_ivf_state_typed_empty_without_centroid_rows(
     assert cents.dtypes == [("pcents", typed), ("rcents", typed)]
     assert [tuple(r) for r in cents.collect()] == [([], [])]
     assert out.count() == both.count() > 0
-    ivfc = _ivf_centroids_frame(spark, str(d), both)
+    ivfc = _ivf_centroids_frame(spark, str(d))
     assert ivfc.dtypes == [("ivfc", typed)]
     assert [tuple(r) for r in ivfc.collect()] == [([],)]
 
 
-def test_session_memo_lookup_evicts_dead_sessions(spark):
-    """The r13 ADVICE memo fix, unit-tested: entries keyed by a DEAD
-    applicationId are evicted (and unpersisted where possible) on any
-    lookup with a live key; the live entry survives and is returned."""
-    from mysql_clickhouse_replication_spark.session import (
-        session_memo_lookup,
-    )
+class _FakeFrame:
+    def __init__(self):
+        self.unpersisted = False
 
-    class FakeFrame:
-        def __init__(self):
-            self.unpersisted = False
+    def unpersist(self):
+        self.unpersisted = True
 
-        def unpersist(self):
-            self.unpersisted = True
+
+def test_session_memo_evicts_dead_sessions(spark, sf_dir):
+    """Entries keyed by a DEAD applicationId are evicted (and their
+    pinned frames unpersisted) on any call with a live key; the live
+    entry survives and a hit returns it."""
+    from mysql_clickhouse_replication_spark.session import table
 
     app = spark.sparkContext.applicationId
-    stale = FakeFrame()
-    live = object()
-    memo = {("dead-app-123", "/x"): stale, (app, "/x"): live}
-    assert session_memo_lookup(memo, (app, "/x")) is live
-    assert ("dead-app-123", "/x") not in memo
+    stale = _FakeFrame()
+    dead = ("dead-app-123", "/x", "orders")
+    table.memo[dead] = (object(), (stale,))
+    live = table(spark, sf_dir, "orders")
+    assert dead not in table.memo
     assert stale.unpersisted
-    # miss on a new key still evicts nothing live and returns None
-    assert session_memo_lookup(memo, (app, "/y")) is None
-    assert (app, "/x") in memo
+    assert table(spark, sf_dir, "orders") is live
+    # a miss on a new key evicts nothing live
+    table(spark, sf_dir, "region")
+    assert (app, os.path.abspath(sf_dir), "orders") in table.memo
+
+
+def test_session_memo_cap_drops_oldest(spark, sf_dir):
+    """``cap=n`` (only _tokenized passes it) keeps at most n entries:
+    a store at the cap drops and unpersists the OLDEST entry first."""
+    from mysql_clickhouse_replication_spark.functions.text import _tokenized
+
+    app = spark.sparkContext.applicationId
+    memo = _tokenized.memo
+    saved = {k: memo.pop(k) for k in list(memo)}
+    fakes = {(app, f"/fake{i}"): _FakeFrame() for i in range(4)}
+    try:
+        for k, f in fakes.items():
+            memo[k] = (object(), (f,))
+        _tokenized(spark, sf_dir)
+        assert len(memo) == 4
+        assert (app, os.path.abspath(sf_dir)) in memo
+        assert [f.unpersisted for f in fakes.values()] == [
+            True, False, False, False
+        ]
+    finally:
+        for k in fakes:
+            memo.pop(k, None)
+        for k, v in saved.items():
+            memo.setdefault(k, v)
+
+
+def test_prune_landing_memo_evicts_dead_sessions(spark, sf_dir):
+    """cdc_partitioned_changelog_prune's landing memo goes through the
+    same eviction as every other memo: a dead session's landing entry is
+    dropped, and the live session's landing is written and read."""
+    from mysql_clickhouse_replication_spark.plans.cdc import _prune_landing
+
+    dead = ("dead-app-123", os.path.abspath(sf_dir), 0)
+    _prune_landing.memo[dead] = ("/nonexistent-landing", ())
+    e.queries()["cdc_partitioned_changelog_prune"](spark, sf_dir).collect()
+    assert dead not in _prune_landing.memo
+    app = spark.sparkContext.applicationId
+    live = [v for k, (v, _) in _prune_landing.memo.items() if k[0] == app]
+    assert len(live) == 1 and os.path.isdir(live[0])
+
+
+def _memo_using_keys() -> list[str]:
+    """Registered keys whose code reaches a memoized function other than
+    table() (which every key reaches), by global-name reachability over
+    the package's module-level functions."""
+    import inspect
+    import sys
+    import types
+
+    from mysql_clickhouse_replication_spark.session import MEMOS
+
+    queries = e.queries()  # imports every registering module
+
+    def names(fn):
+        out, stack = set(), [inspect.unwrap(fn).__code__]
+        while stack:
+            code = stack.pop()
+            out |= set(code.co_names)
+            stack += [c for c in code.co_consts if isinstance(c, types.CodeType)]
+        return out
+
+    fns = {}
+    for mod in list(sys.modules.values()):
+        mod_name = getattr(mod, "__name__", "")
+        if mod_name.startswith("mysql_clickhouse_replication_spark"):
+            for n, v in vars(mod).items():
+                if inspect.isfunction(v) and v.__module__ == mod_name:
+                    fns[n] = names(v)
+    reach = {q.rsplit(".", 1)[1] for q in MEMOS} - {"table"}
+    while new := {n for n, ns in fns.items() if ns & reach} - reach:
+        reach |= new
+    return [k for k, fn in queries.items() if names(fn) & reach]
+
+
+def test_memo_boundary(spark, sf_dir):
+    """Memoized state stays inside the declared boundary: after every
+    memo-using key is constructed and collected, every entry of every
+    registered memo is keyed by the live applicationId and an absolute
+    sf_dir; Python-held state has only int/bool/str/None leaves (no
+    float); and every frame is either an unpersisted plan or one the
+    memo persisted (re-pinned on hit) with no float/double column."""
+    import re
+
+    from pyspark import StorageLevel
+    from pyspark.sql import DataFrame
+
+    from mysql_clickhouse_replication_spark.session import MEMOS
+
+    keys = _memo_using_keys()
+    assert "sim_opq_train" in keys and "graph_triangle_count" in keys
+    queries = e.queries()
+    for k in keys:
+        queries[k](spark, sf_dir).collect()
+
+    app = spark.sparkContext.applicationId
+    problems = []
+
+    def check(name, v, pinned):
+        if isinstance(v, DataFrame):
+            if any(v is p for p in pinned):
+                if re.search(r"\b(float|double)\b", v.schema.simpleString()):
+                    problems.append(f"{name}: persisted float frame {v.schema}")
+            elif v.is_cached or v.storageLevel != StorageLevel.NONE:
+                problems.append(f"{name}: frame persisted outside the memo")
+        elif isinstance(v, (tuple, list)):
+            for x in v:
+                check(name, x, pinned)
+        elif isinstance(v, dict):
+            for kx, x in v.items():
+                check(name, kx, pinned)
+                check(name, x, pinned)
+        elif v is not None and type(v) not in (int, bool, str):
+            problems.append(f"{name}: {type(v).__name__} leaf {v!r}")
+
+    for name, memo in MEMOS.items():
+        assert memo, f"{name}: no entry after the memo-using keys ran"
+        for key, (value, pinned) in memo.items():
+            assert key[0] == app, (name, key)
+            assert key[1] == os.path.abspath(key[1]), (name, key)
+            check(name, value, pinned)
+    assert not problems, "\n".join(problems)

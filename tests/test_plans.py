@@ -2019,14 +2019,21 @@ def test_triangle_degree_broadcast_bounded(spark, sf_dir, plans):
     import duckdb
 
     from mysql_clickhouse_replication_spark.operators.analytics import (
-        _DEG_BCAST_MEMO,
         _degree_frame_broadcastable,
     )
 
+    def guard():
+        return _degree_frame_broadcastable(
+            spark,
+            sf_dir,
+            spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760"),
+        )
+
+    memo = _degree_frame_broadcastable.memo
     stale = ("app-dead-session", sf_dir, "10485760")
-    _DEG_BCAST_MEMO[stale] = True
-    assert _degree_frame_broadcastable(spark, sf_dir)
-    assert stale not in _DEG_BCAST_MEMO
+    memo[stale] = (True, ())
+    assert guard()
+    assert stale not in memo
     assert "BroadcastHashJoin" in plans("graph_triangle_count")
 
     (n01,) = duckdb.connect().execute(
@@ -2038,7 +2045,7 @@ def test_triangle_degree_broadcast_bounded(spark, sf_dir, plans):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
     try:
-        assert not _degree_frame_broadcastable(spark, sf_dir)
+        assert not guard()
         p = _plan(e.queries()["graph_triangle_count"](spark, sf_dir))
         assert "BroadcastHashJoin" not in p, p
         assert "Join" in p  # the attach still happens, as a shuffle join
@@ -2118,14 +2125,15 @@ def test_gram_matrix_partial_agg_no_python(plans):
     only the d(d+1)/2 aggregated cells.
 
     Asserts the COLD construction plan: earlier session tests (the
-    registry-wide oracle compare) materialize the shared _GRAM_MEMO,
+    registry-wide oracle compare) materialize the shared _gram_cells memo,
     and a memo hit renders as InMemoryTableScan instead of the parquet
     scan — evict it first so the audited plan is the one that runs at
     scale."""
     from mysql_clickhouse_replication_spark.functions import pipeline
 
-    for k in list(pipeline._GRAM_MEMO):
-        pipeline._GRAM_MEMO.pop(k).unpersist()
+    memo = pipeline._gram_cells.memo
+    for k in list(memo):
+        memo.pop(k)[0].unpersist()
     p = plans("embedding_gram_matrix")
     read = [ln for ln in p.splitlines() if "ReadSchema" in ln]
     assert read and "embedding" in read[0] and "vec_id" not in read[0]
