@@ -32,6 +32,7 @@ import os
 
 from ..registry import register
 from ..session import scratch_path, session_memo, table
+from ..sources.binlog_wire import OP_SQL
 
 # Shared decode: events fixture -> normalized changelog.
 # Oracle twin of _changelog() — keep the two in lockstep.
@@ -49,17 +50,25 @@ FROM events
 """
 
 
+def decode_events(ev: DataFrame, *extra) -> DataFrame:
+    """events rows (batch or streaming) -> (op, pk, seq, value, *extra):
+    the binlog RowsEvent fields every CDC key starts from, with the op
+    from ``OP_SQL``."""
+    return ev.select(
+        F.expr(OP_SQL).alias("op"),
+        F.col("user_id").alias("pk"),
+        F.col("event_id").alias("seq"),
+        "value",
+        *extra,
+    )
+
+
 def _changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events -> (op, tbl, pk, seq, ts, value, prop_k) changelog rows —
     the DataFrame rendering of a decoded binlog RowsEvent stream."""
     ev = table(spark, sf_dir, "events")
-    op = (
-        F.when(F.col("event_type") == "signup", "insert")
-        .when(F.col("event_type") == "error", "delete")
-        .otherwise("update")
-    )
     return ev.select(
-        op.alias("op"),
+        F.expr(OP_SQL).alias("op"),
         F.concat(F.lit("t"), (F.col("user_id") % 4).cast("string")).alias("tbl"),
         F.col("user_id").alias("pk"),
         F.col("event_id").alias("seq"),

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from ..registry import register
 from ..session import table
 from ..operators._util import D12
+from ..sources.binlog_wire import OP_SQL
 from .cdc import _DECODE_SQL, _changelog, compact
 
 
@@ -1048,10 +1049,7 @@ def cdc_dlq_replay_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("props"))
     )
     log = ev.select(
-        F.when(F.col("event_type") == "signup", "insert")
-        .when(F.col("event_type") == "error", "delete")
-        .otherwise("update")
-        .alias("op"),
+        F.expr(OP_SQL).alias("op"),
         F.concat(F.lit("t"), (F.col("user_id") % 4).cast("string")).alias("tbl"),
         F.when(F.col("event_id") % 97 == 0, F.lit(None))
         .otherwise(F.col("user_id"))

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..session import table
+from .cdc import decode_events
 
 # The shared changelog decode (kept in lockstep with plans/cdc.py's
 # _DECODE_SQL; only the columns this module needs).
@@ -77,16 +78,7 @@ def cdc_collapsing_sign(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange.  This is the identical shuffle ClickHouse's merge pays;
     sign-collapse never compares across pks, so skew defense is the
     same AQE story as cdc_apply_upsert."""
-    ev = table(spark, sf_dir, "events")
-    decoded = ev.select(
-        F.when(F.col("event_type") == "signup", "insert")
-        .when(F.col("event_type") == "error", "delete")
-        .otherwise("update")
-        .alias("op"),
-        F.col("user_id").alias("pk"),
-        F.col("event_id").alias("seq"),
-        "value",
-    )
+    decoded = decode_events(table(spark, sf_dir, "events"))
     w = Window.partitionBy("pk").orderBy("seq")
     seq = decoded.select(
         "op",
@@ -297,15 +289,8 @@ def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange — and in production the older state is a stored snapshot,
     not a recompaction, making this one join + one agg over row counts
     that pruning bounds to the suspected tables."""
-    ev = table(spark, sf_dir, "events")
-    decoded = ev.select(
-        F.when(F.col("event_type") == "signup", "insert")
-        .when(F.col("event_type") == "error", "delete")
-        .otherwise("update")
-        .alias("op"),
-        F.col("user_id").alias("pk"),
-        F.col("event_id").alias("seq"),
-        "value",
+    decoded = decode_events(
+        table(spark, sf_dir, "events"),
         F.get_json_object("props", "$.k").cast("int").alias("prop_k"),
     )
     cut = decoded.agg(
@@ -412,16 +397,7 @@ def cdc_summing_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hashpartitioning(pk) reused), then a pk equi-join — the identical
     shuffle ClickHouse's merge pays, with AQE covering pk skew as in
     cdc_apply_upsert."""
-    ev = table(spark, sf_dir, "events")
-    decoded = ev.select(
-        F.when(F.col("event_type") == "signup", "insert")
-        .when(F.col("event_type") == "error", "delete")
-        .otherwise("update")
-        .alias("op"),
-        F.col("user_id").alias("pk"),
-        F.col("event_id").alias("seq"),
-        "value",
-    )
+    decoded = decode_events(table(spark, sf_dir, "events"))
     return summing_ledger(decoded)
 
 

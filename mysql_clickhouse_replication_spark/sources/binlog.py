@@ -55,6 +55,15 @@ class BinlogReplayReader(SimpleDataSourceStreamReader):
     transactions until at least that many rows have accumulated, then
     cuts at the transaction boundary (a binlog client never commits a
     resume offset inside a transaction).
+
+    Drain contract: with ``batchsize``, one ``Trigger.AvailableNow`` run
+    drains ONE batch, not the backlog.  Spark asks a simple reader for
+    its ``latestOffset`` once when an AvailableNow run starts, and
+    pyspark's ``_SimpleStreamReaderWrapper.latestOffset`` answers with a
+    single ``read()`` — so the run ends at the first batch's end offset.
+    To drain the log, run the default trigger with
+    ``processAllAvailable()`` (every trigger reads one more batch), or
+    restart the AvailableNow query once per batch from its checkpoint.
     """
 
     def __init__(self, options) -> None:

@@ -10,8 +10,8 @@ public binlog v4 format (dev.mysql.com/doc/internals — binlog event
 header, FORMAT_DESCRIPTION, TABLE_MAP, ROWS_EVENT v2, XID), with
 
 * ``record_changelog(...)`` — the RECORDER: synthesizes a binlog byte
-  stream from the events fixture (op mapping identical to
-  plans/cdc.py's _changelog: signup->WRITE, error->DELETE,
+  stream from the events fixture (op mapping ``OP_SQL``, the one the
+  engine's decode uses too: signup->WRITE, error->DELETE,
   else->UPDATE).  In production this byte stream is what arrives from
   the server socket; offline we have to manufacture it, but from here
   down the pipeline handles real bytes.
@@ -84,6 +84,15 @@ _OP_TO_TYPE = {
     "delete": DELETE_ROWS_EVENT_V2,
 }
 _TYPE_TO_OP = {v: k for k, v in _OP_TO_TYPE.items()}
+
+#: The op of an ``events`` fixture row as a SQL CASE over ``event_type``
+#: — the one event->op map of the engine.  The text is valid in both
+#: DuckDB (the recorder below) and Spark SQL (plans/cdc.py's
+#: ``decode_events`` and ``_changelog``).
+OP_SQL = (
+    "CASE WHEN event_type = 'signup' THEN 'insert' "
+    "WHEN event_type = 'error' THEN 'delete' ELSE 'update' END"
+)
 
 
 def _packed(n: int) -> bytes:
@@ -243,19 +252,17 @@ def _statements(
 
 
 def encode_changelog(rows: Iterable[tuple[str, int, int, float]]) -> bytes:
-    """Encode (op, pk, seq, value) rows into a binlog byte stream.
+    """Encode (op, pk, seq, value) rows into one binlog byte stream: the
+    rotated encoding with no size limit, so never more than one file.
 
     Every statement commits with an XID so any post-XID offset is a
     valid resume point."""
-    enc = _Encoder()
-    for op, run in _statements(rows):
-        enc.rows_statement(op, run)
-    return enc.tobytes()
+    return encode_changelog_rotated(rows, max_bytes=math.inf)[0][1]
 
 
 def encode_changelog_rotated(
     rows: Iterable[tuple[str, int, int, float]],
-    max_bytes: int = 1 << 16,
+    max_bytes: float = 1 << 16,
     basename: str = "changelog-bin",
 ) -> list[tuple[str, bytes]]:
     """Encode rows into a CHAIN of rotated binlog files, the on-disk
@@ -460,44 +467,45 @@ def pack_ranges(
     return [ranges[a:b] for a, b in zip(cuts, cuts[1:])]
 
 
-def record_changelog(events_parquet: str) -> str:
-    """RECORD the events fixture as a binlog byte file; return its path.
-
-    The byte stream is memoized per (path, mtime) under
-    .scratch/binlog_wire and written atomically (temp + rename) so
-    concurrent verify/bench readers either see the finished file or
-    record their own — same TOCTOU discipline as the partitioned
-    landing in plans/cdc.py."""
-    import duckdb
+def _recording_path(events_parquet: str, ext: str, *key: object) -> str:
+    """Path of a recording of ``events_parquet`` under .scratch/binlog_wire,
+    named by a hash of (abspath, mtime, *key): a rewritten fixture gets a
+    fresh recording."""
+    import hashlib
 
     from ..session import scratch_path
 
-    import hashlib
-
     mtime = int(os.path.getmtime(events_parquet))
-    key = hashlib.md5(
-        f"{os.path.abspath(events_parquet)}:{mtime}".encode()
-    ).hexdigest()[:16]
+    ident = ":".join(map(str, (os.path.abspath(events_parquet), mtime, *key)))
     base = scratch_path("binlog_wire", unique=False)
     os.makedirs(base, exist_ok=True)
-    out = os.path.join(base, f"{key}.binlog")
-    if os.path.exists(out):
-        return out
-    rows = duckdb.connect().execute(
-        f"""
-        SELECT CASE WHEN event_type = 'signup' THEN 'insert'
-                    WHEN event_type = 'error'  THEN 'delete'
-                    ELSE 'update' END AS op,
-               user_id, event_id, value
-        FROM read_parquet('{events_parquet}')
-        ORDER BY event_id
-        """
-    ).fetchall()
-    blob = encode_changelog(rows)
-    tmp = out + f".tmp.{os.getpid()}"
-    with open(tmp, "wb") as fh:
-        fh.write(blob)
-    os.replace(tmp, out)
+    return os.path.join(base, hashlib.md5(ident.encode()).hexdigest()[:16] + ext)
+
+
+def _fixture_rows(events_parquet: str) -> list[tuple]:
+    """The fixture as (op, pk, seq, value) rows in event_id order."""
+    import duckdb
+
+    with duckdb.connect() as con:
+        return con.execute(
+            f"SELECT {OP_SQL} AS op, user_id, event_id, value "
+            f"FROM read_parquet('{events_parquet}') ORDER BY event_id"
+        ).fetchall()
+
+
+def record_changelog(events_parquet: str) -> str:
+    """RECORD the events fixture as a binlog byte file; return its path.
+
+    The file is memoized per (path, mtime) and re-recorded when missing.
+    It is written atomically (temp + rename) so concurrent verify/bench
+    readers either see the finished file or record their own — same
+    TOCTOU discipline as the partitioned landing in plans/cdc.py."""
+    out = _recording_path(events_parquet, ".binlog")
+    if not os.path.exists(out):
+        tmp = out + f".tmp.{os.getpid()}"
+        with open(tmp, "wb") as fh:
+            fh.write(encode_changelog(_fixture_rows(events_parquet)))
+        os.replace(tmp, out)
     return out
 
 
@@ -512,31 +520,10 @@ def record_changelog_rotated(
     ``os.rename``d into place, so concurrent readers see either the
     complete chain or none of it.  Chain order is recovered from the
     names (the ``.NNNNNN`` convention makes lexicographic order chain
-    order) and sanity-checked against the ROTATE linkage."""
-    import hashlib
-
-    import duckdb
-
-    from ..session import scratch_path
-
-    mtime = int(os.path.getmtime(events_parquet))
-    key = hashlib.md5(
-        f"{os.path.abspath(events_parquet)}:{mtime}:{max_bytes}".encode()
-    ).hexdigest()[:16]
-    base = scratch_path("binlog_wire", unique=False)
-    os.makedirs(base, exist_ok=True)
-    outdir = os.path.join(base, f"{key}.rotated")
+    order)."""
+    outdir = _recording_path(events_parquet, ".rotated", max_bytes)
     if not os.path.isdir(outdir):
-        rows = duckdb.connect().execute(
-            f"""
-            SELECT CASE WHEN event_type = 'signup' THEN 'insert'
-                        WHEN event_type = 'error'  THEN 'delete'
-                        ELSE 'update' END AS op,
-                   user_id, event_id, value
-            FROM read_parquet('{events_parquet}')
-            ORDER BY event_id
-            """
-        ).fetchall()
+        rows = _fixture_rows(events_parquet)
         tmpdir = outdir + f".tmp.{os.getpid()}"
         os.makedirs(tmpdir, exist_ok=True)
         for name, blob in encode_changelog_rotated(rows, max_bytes):

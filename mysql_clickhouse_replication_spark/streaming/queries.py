@@ -27,17 +27,15 @@ exactly-once half of the checkpoint contract.
 
 from __future__ import annotations
 
-import os
 import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.cdc import decode_events
 from ..registry import register
 from ..session import session_memo, table
-
-_REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _scratch(*parts: str) -> str:
@@ -87,18 +85,18 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: small.  Unlike batch shuffle width (sized to data volume), state
 #: parallelism is sized to retained-state volume and key cardinality:
 #: the fixture replays retain kilobytes, so 8 partitions is generous,
-#: while a 100 TB/day deployment raises the env knob at first deploy
+#: while a 100 TB/day deployment raises it before its first deploy
 #: (it is pinned into the checkpoint thereafter).  Measured at sf0.1
 #: (local[32], round 8): the 7-key streaming extras set 17.9 s -> 12.3
 #: s (-31%), stream_stream_join alone 6.0 s -> 2.4 s, with hash-
 #: identical results at every gate SF.
-_STATE_PARTITIONS = os.environ.get("SPARK_GRAFT_STATE_PARTITIONS", "8")
+_STATE_PARTITIONS = "8"
 
 
 @contextmanager
 def _state_scaled(spark: SparkSession):
-    """Temporarily pin shuffle partitions to the state-store knob while
-    a streaming query plans and runs (availableNow queries execute
+    """Temporarily pin shuffle partitions to the state partition count
+    while a streaming query plans and runs (availableNow queries execute
     synchronously inside the block; keys run serially in verify/bench,
     so the save/restore cannot interleave)."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
@@ -129,6 +127,20 @@ def _run_to_memory(sdf: DataFrame, mode: str) -> DataFrame:
         )
         q.awaitTermination()
     return sdf.sparkSession.table(name)
+
+
+def _run_foreach_batch(
+    sdf: DataFrame, write_batch, ckpt: str | None = None
+) -> None:
+    """Drain a streaming DataFrame (availableNow) through the
+    foreachBatch callback ``write_batch(batch_df, batch_id)``, resuming
+    from ``ckpt`` when given.  The CDC sinks that call this are
+    map-only (no state store, no Exchange), so the shuffle width is left
+    as the session has it."""
+    w = sdf.writeStream.foreachBatch(write_batch).trigger(availableNow=True)
+    if ckpt is not None:
+        w = w.option("checkpointLocation", ckpt)
+    w.start().awaitTermination()
 
 
 @register(
@@ -279,120 +291,6 @@ def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_memory(out, "update")
 
 
-@contextmanager
-def _rocksdb_state_store(spark: SparkSession):
-    """Temporarily pin the state-store provider to RocksDB while a
-    transformWithState query plans and runs (the API requires it; the
-    default HDFSBackedStateStoreProvider is rejected at query start).
-    Save/restore discipline mirrors _state_scaled — keys run serially
-    in verify/bench, so the swap cannot interleave.  In production the
-    provider is set once per cluster: RocksDB is the recommended store
-    for large state anyway (off-heap, incremental checkpoints)."""
-    k = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(k, None)
-    spark.conf.set(
-        k,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(k)
-        else:
-            spark.conf.set(k, old)
-
-
-#: Why stream_stateful_tws is NOT a registered contract key in this
-#: container: transformWithStateInPandas hard-requires the python
-#: ``google.protobuf`` package (its state-server protocol is protobuf —
-#: pyspark sql/streaming/proto/StateMessage_pb2.py), which is absent
-#: here and cannot be installed (no network, no-pip environment rule).
-#: The query CONSTRUCTS fine (the plan wiring is pure Python/JVM and is
-#: asserted in tests/test_plans.py::test_stream_stateful_tws_plan_wiring)
-#: but the streaming Python runner crashes at query start with
-#: ``ImportError: cannot import name 'descriptor' from 'google.protobuf'``
-#: (observed 2026-08-15).  Registering it would be a guaranteed red
-#: CORRECTNESS row, so — same honesty discipline as the docker-less
-#: live-wire integration (INTEGRATION_r11.md) — the full implementation
-#: ships, the execution test runs the oracle compare where protobuf
-#: exists and skips with the environment reason here; promoting it to a
-#: registered key is one @register line once the dependency lands.
-def stream_stateful_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME per-user running aggregate as stream_stateful, through
-    transformWithStateInPandas — Spark 4's arbitrary-stateful-
-    processing API (pyspark sql/pandas/group_ops.py:427), the successor
-    SURVEY §2.J itself cites for applyInPandasWithState (r10 verdict
-    "What's missing" #4): a StatefulProcessor object with named,
-    individually-evolvable state variables (getValueState/getListState/
-    getMapState), timers (handleExpiredTimer), TTL per variable, and an
-    initial-state hook — where the older API packs ALL state into one
-    positional tuple and one timeout callback.  Keeping both makes the
-    pair a migration template: identical semantics, identical oracle
-    (stream_stateful's), old vs new API surface.
-
-    State here is one ValueState ('agg': count, max, purchase count)
-    updated per micro-batch; values are order-insensitive, so the
-    bounded availableNow replay is deterministic.  Requires the RocksDB
-    state-store provider (pinned for the query's lifetime by the
-    context manager above).  Scale: state is keyed by user_id and
-    partitioned across executors exactly like the old API; RocksDB
-    keeps it off-heap with incremental checkpointing — the production
-    store for 100 TB-day state."""
-    with _rocksdb_state_store(spark):
-        out = _stream_stateful_tws_df(spark, sf_dir)
-        return _run_to_memory(out, "update")
-
-
-def _stream_stateful_tws_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Build (don't start) stream_stateful_tws's streaming DataFrame —
-    split out so the plan wiring is assertable without the protobuf
-    runtime the execution needs (see the gate note above)."""
-    from pyspark.sql.streaming import StatefulProcessor
-
-    class _RunningAgg(StatefulProcessor):
-        def init(self, handle):
-            self._agg = handle.getValueState(
-                "agg", "n long, mx double, np long"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            n, mx, np_ = (
-                self._agg.get() if self._agg.exists()
-                else (0, float("-inf"), 0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                mx = max(mx, float(pdf["value"].max()))
-                np_ += int((pdf["event_type"] == "purchase").sum())
-            self._agg.update((n, mx, np_))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "max_value": [mx],
-                    "n_purchases": [np_],
-                }
-            )
-
-        def close(self):
-            pass
-
-    sdf = _events_stream(spark, sf_dir).select("user_id", "event_type", "value")
-    return sdf.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_RunningAgg(),
-        outputStructType=(
-            "user_id long, n_events long, max_value double,"
-            " n_purchases long"
-        ),
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 @register(
     "stream_triggers",
     oracle="SELECT event_type, COUNT(*) AS n FROM events GROUP BY event_type",
@@ -478,27 +376,10 @@ def cdc_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet; in production the same foreachBatch body calls the
     ClickHouse JDBC/native writer. What's verified is the LANDED data."""
     sink = _scratch("cdc_sink", uuid.uuid4().hex)
-    sdf = _events_stream(spark, sf_dir)
-    decoded = sdf.select(
-        F.when(F.col("event_type") == "signup", "insert")
-        .when(F.col("event_type") == "error", "delete")
-        .otherwise("update")
-        .alias("op"),
-        F.col("user_id").alias("pk"),
-        F.col("event_id").alias("seq"),
-        "value",
+    _run_foreach_batch(
+        decode_events(_events_stream(spark, sf_dir)),
+        lambda bdf, batch_id: bdf.write.mode("append").parquet(sink),
     )
-
-    def write_batch(bdf: DataFrame, batch_id: int) -> None:
-        bdf.write.mode("append").parquet(sink)
-
-    with _state_scaled(spark):
-        q = (
-            decoded.writeStream.foreachBatch(write_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return spark.read.parquet(sink)
 
 
@@ -561,29 +442,13 @@ def cdc_sink_wire(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.rowbinary import decode_batches, encode_batches
 
     sink = _scratch("cdc_sink_wire", uuid.uuid4().hex)
-    sdf = _events_stream(spark, sf_dir)
-    decoded = sdf.select(
-        F.when(F.col("event_type") == "signup", "insert")
-        .when(F.col("event_type") == "error", "delete")
-        .otherwise("update")
-        .alias("op"),
-        F.col("user_id").alias("pk"),
-        F.col("event_id").alias("seq"),
-        "value",
-    )
     types = ["Nullable(String)", "Nullable(Int64)", "Nullable(Int64)",
              "Nullable(Float64)"]
-
-    def write_batch(bdf: DataFrame, batch_id: int) -> None:
-        encode_batches(bdf, types).write.mode("append").parquet(sink)
-
-    with _state_scaled(spark):
-        q = (
-            decoded.writeStream.foreachBatch(write_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_foreach_batch(
+        decode_events(_events_stream(spark, sf_dir)),
+        lambda bdf, batch_id: encode_batches(bdf, types)
+        .write.mode("append").parquet(sink),
+    )
 
     payloads = spark.read.parquet(sink)
     wire = decode_batches(
@@ -618,29 +483,13 @@ def cdc_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     run_id = uuid.uuid4().hex
     sink = _scratch("cdc_ckpt_sink", run_id)
     ckpt = _scratch("cdc_ckpt_meta", run_id)
-    sdf = _events_stream(spark, sf_dir)
-    decoded = sdf.select(
-        F.when(F.col("event_type") == "signup", "insert")
-        .when(F.col("event_type") == "error", "delete")
-        .otherwise("update")
-        .alias("op"),
-        F.col("user_id").alias("pk"),
-        F.col("event_id").alias("seq"),
-        "value",
-    )
-
-    def write_batch(bdf: DataFrame, batch_id: int) -> None:
-        bdf.write.mode("append").parquet(sink)
-
-    with _state_scaled(spark):
-        for _ in range(2):  # initial run, then resume-from-checkpoint
-            q = (
-                decoded.writeStream.foreachBatch(write_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+    decoded = decode_events(_events_stream(spark, sf_dir))
+    for _ in range(2):  # initial run, then resume-from-checkpoint
+        _run_foreach_batch(
+            decoded,
+            lambda bdf, batch_id: bdf.write.mode("append").parquet(sink),
+            ckpt,
+        )
     return spark.read.parquet(sink)
 
 
@@ -756,37 +605,18 @@ def cdc_sink_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
     raises instead of returning."""
     sink = _scratch("cdc_sink_idem", uuid.uuid4().hex)
 
-    def run_once() -> None:
-        sdf = _events_stream(spark, sf_dir)
-        decoded = sdf.select(
-            F.when(F.col("event_type") == "signup", "insert")
-            .when(F.col("event_type") == "error", "delete")
-            .otherwise("update")
-            .alias("op"),
-            F.col("user_id").alias("pk"),
-            F.col("event_id").alias("seq"),
-            "value",
+    def write_batch(bdf: DataFrame, batch_id: int) -> None:
+        (
+            bdf.withColumn("batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(sink)
         )
 
-        def write_batch(bdf: DataFrame, batch_id: int) -> None:
-            (
-                bdf.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(sink)
-            )
-
-        with _state_scaled(spark):
-            q = (
-                decoded.writeStream.foreachBatch(write_batch)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-    run_once()
-    run_once()  # full redelivery — must overwrite, not duplicate
+    decoded = decode_events(_events_stream(spark, sf_dir))
+    for _ in range(2):  # the second run is a full redelivery
+        _run_foreach_batch(decoded, write_batch)
     out = spark.read.parquet(sink).select("op", "pk", "seq", "value")
     n_sink = out.count()
     n_src = spark.read.parquet(f"{sf_dir}/events.parquet").count()
@@ -798,16 +628,7 @@ def cdc_sink_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-@register(
-    "stream_resume_incremental",
-    oracle="""
-SELECT CASE WHEN event_type = 'signup' THEN 'insert'
-            WHEN event_type = 'error'  THEN 'delete'
-            ELSE 'update' END AS op,
-       user_id AS pk, event_id AS seq, value
-FROM events
-""",
-)
+@register("stream_resume_incremental", oracle=_CDC_DECODE_ORACLE)
 def stream_resume_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental resume — the property the reference's persisted
     (log_file, log_pos) actually buys, strictly stronger than
@@ -839,33 +660,19 @@ def stream_resume_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         "overwrite"
     ).parquet(stage)
 
-    def consume() -> None:
-        sdf = spark.readStream.schema(schema_src.schema).parquet(stage)
-        decoded = sdf.select(
-            F.when(F.col("event_type") == "signup", "insert")
-            .when(F.col("event_type") == "error", "delete")
-            .otherwise("update")
-            .alias("op"),
-            F.col("user_id").alias("pk"),
-            F.col("event_id").alias("seq"),
-            "value",
-        )
-        with _state_scaled(spark):
-            q = (
-                decoded.writeStream.foreachBatch(
-                    lambda bdf, bid: bdf.write.mode("append").parquet(sink)
-                )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+    decoded = decode_events(
+        spark.readStream.schema(schema_src.schema).parquet(stage)
+    )
 
-    consume()  # run 1: first half only
+    def append(bdf: DataFrame, batch_id: int) -> None:
+        bdf.write.mode("append").parquet(sink)
+
+    _run_foreach_batch(decoded, append, ckpt)  # run 1: first half only
     # new data lands while the stream is down (distinct file names —
     # mode=append adds files, leaving run 1's consumed files in place)
     schema_src.filter(F.col("event_id") > F.lit(cut)).coalesce(1).write.mode(
         "append"
     ).parquet(stage)
-    consume()  # run 2: resumes from checkpoint, consumes ONLY the delta
+    # run 2: resumes from checkpoint, consumes ONLY the delta
+    _run_foreach_batch(decoded, append, ckpt)
     return spark.read.parquet(sink)

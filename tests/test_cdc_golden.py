@@ -73,17 +73,7 @@ def test_checkpoint_resumes_mid_stream_exactly_once(spark, sf_dir, tmp_path):
     committed offset: the sink ends with exactly one copy of every
     changelog row — no loss, no redelivery — which is the reference's
     (log_file, log_pos) resume contract."""
-    from pyspark.sql import functions as F
-
-    from mysql_clickhouse_replication_spark.sources.binlog import (
-        BinlogReplaySource,
-    )
-
-    try:
-        spark.dataSource.register(BinlogReplaySource)
-    except Exception:
-        pass
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    _register_binlog_source(spark)
     sink = str(tmp_path / "sink")
     ckpt = str(tmp_path / "ckpt")
     total = spark.read.parquet(f"{sf_dir}/events.parquet").count()
@@ -121,8 +111,60 @@ def test_checkpoint_resumes_mid_stream_exactly_once(spark, sf_dir, tmp_path):
     assert out.count() == total  # no loss, no redelivery
     assert out.select("seq").distinct().count() == total
     # decoded payload matches the batch decode bit-for-bit
+    _assert_same_rows(out, _batch_decode(spark, sf_dir))
+
+
+def test_default_trigger_drains_every_batch_exactly_once(
+    spark, sf_dir, tmp_path
+):
+    """The drain the replication loop runs: with ``batchsize``, the
+    default trigger plus processAllAvailable() walks the whole binlog in
+    several micro-batches (one AvailableNow run would stop after the
+    first, see BinlogReplayReader) and lands every row exactly once."""
+    _register_binlog_source(spark)
+    sink = str(tmp_path / "sink")
+    total = spark.read.parquet(f"{sf_dir}/events.parquet").count()
+    src = (
+        spark.readStream.format("binlog_replay")
+        .option("path", f"{sf_dir}/events.parquet")
+        .option("batchsize", str(max(1, total // 3)))
+        .load()
+    )
+    qh = (
+        src.writeStream.format("parquet")
+        .option("path", sink)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        qh.processAllAvailable()
+    finally:
+        qh.stop()
+    batches = [p for p in qh.recentProgress if p.numInputRows > 0]
+    assert len(batches) > 1, len(batches)
+    assert sum(p.numInputRows for p in batches) == total
+    out = spark.read.parquet(sink)
+    assert out.count() == total
+    assert out.select("seq").distinct().count() == total
+    _assert_same_rows(out, _batch_decode(spark, sf_dir))
+
+
+def _register_binlog_source(spark) -> None:
+    from mysql_clickhouse_replication_spark.sources.binlog import (
+        BinlogReplaySource,
+    )
+
+    try:
+        spark.dataSource.register(BinlogReplaySource)
+    except Exception:
+        pass
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+
+def _batch_decode(spark, sf_dir):
+    """The fixture's (op, pk, seq, value) changelog, decoded in batch."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    expect = ev.select(
+    return ev.select(
         F.when(F.col("event_type") == "signup", "insert")
         .when(F.col("event_type") == "error", "delete")
         .otherwise("update")
@@ -131,8 +173,11 @@ def test_checkpoint_resumes_mid_stream_exactly_once(spark, sf_dir, tmp_path):
         F.col("event_id").alias("seq"),
         "value",
     )
-    assert out.exceptAll(expect).count() == 0
-    assert expect.exceptAll(out).count() == 0
+
+
+def _assert_same_rows(got, want) -> None:
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
 
 
 def test_heartbeat_separates_idle_from_lagging(spark, sf_dir):

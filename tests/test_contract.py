@@ -322,6 +322,30 @@ def test_no_module_memo_outside_session():
     assert not found, "\n".join(found)
 
 
+def test_one_event_op_map():
+    """The event->op map is written once, as binlog_wire.OP_SQL; no
+    package module re-spells it as a ``F.when`` chain.  Plain signup
+    filters (cohort and storm keys) are not op maps and stay legal."""
+    import glob
+    import os
+    import re
+
+    pkg = os.path.join(
+        os.path.dirname(__file__), os.pardir,
+        "mysql_clickhouse_replication_spark",
+    )
+    spelled = re.compile(
+        r"""F\.when\(\s*F\.col\(\s*["']event_type["']\s*\)\s*==\s*["']signup["']"""
+    )
+    found = [
+        f"{os.path.relpath(path, pkg)}:{i}: {ln.strip()}"
+        for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)
+        for i, ln in enumerate(open(path), start=1)
+        if spelled.search(ln)
+    ]
+    assert not found, "\n".join(found)
+
+
 def _write_proof(d, rnd, rows):
     import json
 

@@ -1645,8 +1645,8 @@ def test_exact_quantiles_single_scan_one_histogram_pass(plans):
     assert "Join" not in tree, p
 
 
-def test_state_partitions_knob_restores_batch_shuffle_width(spark, sf_dir):
-    """The streaming keys plan under SPARK_GRAFT_STATE_PARTITIONS via a
+def test_state_partitions_restores_batch_shuffle_width(spark, sf_dir):
+    """The stateful streaming keys plan under _STATE_PARTITIONS via a
     save/restore context; a leak would silently shrink every subsequent
     BATCH key's shuffle width to 8."""
     from mysql_clickhouse_replication_spark.streaming import queries as sq
@@ -1946,65 +1946,6 @@ def test_watermark_sharded_all_windows_partitioned(plans):
     assert not unpart, wins
     band_only = [g for g in wins if "shard" not in g]
     assert len(band_only) <= 1, wins
-
-
-def test_stream_stateful_tws_plan_wiring(spark, sf_dir):
-    """stream_stateful_tws (unregistered — protobuf-gated, see the
-    module note in streaming/queries.py): the transformWithStateInPandas
-    query must CONSTRUCT correctly in this container even though the
-    streaming Python runner cannot start without google.protobuf — the
-    analyzed plan carries the TransformWithStateInPySpark operator
-    keyed on user_id, the declared output schema, and isStreaming."""
-    from mysql_clickhouse_replication_spark.streaming.queries import (
-        _stream_stateful_tws_df,
-    )
-
-    df = _stream_stateful_tws_df(spark, sf_dir)
-    assert df.isStreaming
-    assert [f.name for f in df.schema.fields] == [
-        "user_id", "n_events", "max_value", "n_purchases",
-    ]
-    analyzed = df._jdf.queryExecution().analyzed().toString()
-    assert "transformWithStateInPySpark" in analyzed.replace(
-        "TransformWithStateInPySpark", "transformWithStateInPySpark"
-    ), analyzed
-    assert "user_id" in analyzed
-
-
-def test_stream_stateful_tws_matches_oracle(spark, sf_dir):
-    """Execution half of the TWS twin: runs ONLY where google.protobuf
-    exists (absent in this container — the skip reason IS the
-    environment record, same honesty discipline as the docker-less
-    integration).  Where it runs, the new-API result must hash-match
-    stream_stateful's oracle exactly."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithStateInPandas needs python protobuf; "
-        "not installed in this container (no-network, no-pip)",
-    )
-    import duckdb
-
-    from mysql_clickhouse_replication_spark.streaming.queries import (
-        stream_stateful_tws,
-    )
-
-    got = sorted(
-        tuple(r) for r in stream_stateful_tws(spark, sf_dir).collect()
-    )
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/events.parquet')"
-    )
-    want = sorted(
-        tuple(r)
-        for r in con.execute(
-            "SELECT user_id, COUNT(*) AS n_events, MAX(value) AS max_value,"
-            " COUNT(*) FILTER (WHERE event_type = 'purchase') AS n_purchases"
-            " FROM events GROUP BY user_id"
-        ).fetchall()
-    )
-    assert got == want
 
 
 def test_triangle_degree_broadcast_bounded(spark, sf_dir, plans):
