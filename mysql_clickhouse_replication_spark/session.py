@@ -45,13 +45,29 @@ from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+#: the directory holding this package (the repo root).
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 #: scratch families already stale-pruned by this process (see
 #: scratch_path) — prune once per session, not once per key.
 _PRUNED_FAMILIES: set[str] = set()
 
 
 def get_spark(app_name: str = "mysql_clickhouse_replication_spark") -> SparkSession:
-    """Build (or reuse) the engine's SparkSession with scale-aware defaults."""
+    """Build (or reuse) the engine's SparkSession with scale-aware defaults.
+
+    Python UDF workers start from ``pydaemon``, not ``pyspark.daemon``:
+    Spark puts ``SPARK_HOME``'s ``pyspark.zip``, py4j zip and spark-core
+    jar first on every worker's path, and on CPython 3.11 each task's
+    ``importlib.invalidate_caches()`` re-reads every cached archive
+    directory, about 0.13 CPU-s per task.  ``pydaemon`` drops those
+    archives when the interpreter's own pyspark is importable, so a task
+    reads none.  The package root goes on the worker path so the daemon
+    module is found from any working directory.  Workers that do not read
+    this setting still import from the zip: the streaming source runner
+    (a fixed module, no daemon) and the data-source planner workers
+    (``pyspark.daemon`` hard-wired).
+    """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
     builder = (
@@ -65,6 +81,8 @@ def get_spark(app_name: str = "mysql_clickhouse_replication_spark") -> SparkSess
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", f"{__package__}.pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", _REPO)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -84,8 +102,7 @@ def scratch_path(*parts: str, unique: bool = True) -> str:
     import time
     import uuid
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    base = os.path.join(repo, ".scratch", parts[0]) if parts else None
+    base = os.path.join(_REPO, ".scratch", parts[0]) if parts else None
     # Prune each family ONCE per process: stale siblings are >2 h old
     # by definition, so nothing new becomes prunable within one run and
     # repeating the listdir/mtime walk per key is pure per-key overhead
@@ -101,7 +118,7 @@ def scratch_path(*parts: str, unique: bool = True) -> str:
             except OSError:
                 pass
     leaf = (uuid.uuid4().hex,) if unique else ()
-    return os.path.join(repo, ".scratch", *parts, *leaf)
+    return os.path.join(_REPO, ".scratch", *parts, *leaf)
 
 
 #: memo name ("module.qualname") -> {key: (value, pinned frames)}.

@@ -400,3 +400,72 @@ def test_gate_window_is_stalest_cohort():
         newest.get(k, 0) for k in rest
     )
     assert list(e.oracle_sql())[:50] == window
+
+
+def test_udf_workers_import_site_pyspark(spark):
+    """Python UDF workers import the interpreter's compiled pyspark, not
+    SPARK_HOME's pyspark.zip, and cache no importer for a SPARK_HOME
+    archive, so a task's importlib.invalidate_caches() reads none."""
+    import os
+
+    import pyarrow as pa
+    from pyspark.find_spark_home import _find_spark_home
+
+    def probe(batches):
+        import sys
+        import zipimport
+
+        import pyspark
+
+        for _ in batches:
+            pass
+        zips = [k for k, v in sys.path_importer_cache.items()
+                if isinstance(v, zipimport.zipimporter)]
+        yield pa.RecordBatch.from_pylist(
+            [{"file": pyspark.__file__, "version": pyspark.__version__, "zips": zips}]
+        )
+
+    row = spark.range(1).mapInArrow(
+        probe, "file string, version string, zips array<string>"
+    ).collect()[0]
+    home = os.path.join(os.path.realpath(_find_spark_home()), "")
+    assert os.path.isfile(row.file), row.file
+    assert row.version == spark.version
+    assert not [z for z in row.zips if os.path.realpath(z).startswith(home)], row.zips
+
+
+def test_spark_archive_filter(tmp_path):
+    """pydaemon.spark_archives drops only archive files under SPARK_HOME,
+    compared by realpath (SPARK_HOME may be a symlink to the versioned
+    install), keeps the stdlib zip, and drops nothing when pyspark would
+    not be importable without the archives."""
+    import sys
+
+    from mysql_clickhouse_replication_spark.pydaemon import spark_archives
+
+    real = tmp_path / "spark-4.1.2-bin-hadoop3"
+    (real / "python" / "lib").mkdir(parents=True)
+    (real / "jars").mkdir()
+    home = tmp_path / "spark"
+    home.symlink_to(real)
+    site = tmp_path / "site-packages"
+    (site / "pyspark").mkdir(parents=True)
+    (site / "pyspark" / "__init__.py").write_text("")
+    for f in ("python/lib/pyspark.zip", "python/lib/py4j-0.10.9.9-src.zip",
+              "jars/spark-core_2.13-4.1.2.jar"):
+        (real / f).write_bytes(b"")
+    stdlib = tmp_path / f"python{sys.version_info[0]}{sys.version_info[1]}.zip"
+    stdlib.write_bytes(b"")
+    archives = [
+        str(home / "python" / "lib" / "pyspark.zip"),
+        str(home / "python" / "lib" / "py4j-0.10.9.9-src.zip"),
+        str(real / "jars" / "spark-core_2.13-4.1.2.jar"),
+    ]
+    path = [str(tmp_path), *archives, str(stdlib), str(site)]
+
+    assert spark_archives(path, str(home)) == archives
+    assert spark_archives(path, str(real)) == archives
+    assert spark_archives(path, None) == []
+    bare = tmp_path / "no-pyspark"
+    bare.mkdir()
+    assert spark_archives([*path[:-1], str(bare)], str(home)) == []

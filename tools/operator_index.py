@@ -38,22 +38,29 @@ def main() -> int:
         "grouping and contract details in SURVEY.md §2.",
         "",
         "**Cost of a Python task.** Every Python-UDF task (mapInArrow, "
-        "mapInPandas, pandas_udf) costs about 0.17-0.2 CPU-s before the "
-        "UDF runs: the worker's `setup_spark_files` calls "
-        "`importlib.invalidate_caches()`, and on CPython 3.11 each of "
-        "about 16 `zipimporter`s re-reads the 1,170-entry `pyspark.zip` "
-        "directory. Measured on a 4-vCPU host with local[4]: a trivial "
-        "mapInArrow over 8 one-row partitions costs 2.04 CPU-s against "
-        "0.50 over 1, i.e. 0.22 CPU-s per extra task, 0.18 of it in "
-        "Python processes. A `binlog_replay` stream start pays the same "
-        "import once more in `python_streaming_source_runner`, about "
-        "1.4 CPU-s (pyspark imported from the zip with no bytecode); "
-        "starting one stream and replaying 1,000 events costs 2.9 CPU-s. "
-        "So a key that fans a small input out over many Python tasks "
-        "pays the task count, not its compute: the binlog decode keys "
-        "(`cdc_decode_sharded`, `cdc_decode_multifile`) size their "
-        "Arrow tasks by bytes with Spark's file-split rule, one task "
-        "below the 4 MB open cost.",
+        "mapInPandas, pandas_udf) starts with the worker's "
+        "`setup_spark_files` calling `importlib.invalidate_caches()`, and "
+        "on CPython 3.11 every cached `zipimporter` re-reads its whole "
+        "archive directory on that call. Spark puts `SPARK_HOME`'s "
+        "`pyspark.zip`, py4j zip and spark-core jar first on every "
+        "worker's path, so a reused worker that imports pyspark from them "
+        "holds 16 such importers and pays about 0.13 CPU-s per task before "
+        "the UDF runs. `session.get_spark` starts UDF workers from "
+        "`pydaemon`, which drops those archives when the interpreter's own "
+        "pyspark is importable and then runs `pyspark.daemon` unchanged: a "
+        "trivial mapInArrow task in a reused worker now costs about 0.025 "
+        "worker CPU-s (4-vCPU host, local[4], worker `getrusage` across "
+        "reused tasks). Two kinds of Python process still import pyspark "
+        "from the zip, because `spark.python.daemon.module` does not reach "
+        "them: `python_streaming_source_runner`, which Spark starts as a "
+        "fixed module with no daemon, about 1.4 CPU-s per `binlog_replay` "
+        "stream start; and the data-source planner workers, whose daemon "
+        "is hard-wired to `pyspark.daemon`. A new worker also pays its "
+        "first pyarrow import, about 0.2 CPU-s, so a key that fans a small "
+        "input out over many Python tasks still pays for the task count: "
+        "the binlog decode keys (`cdc_decode_sharded`, "
+        "`cdc_decode_multifile`) size their Arrow tasks by bytes with "
+        "Spark's file-split rule, one task below the 4 MB open cost.",
         "",
         "| key | source | semantics | oracle |",
         "| --- | --- | --- | --- |",
