@@ -1,4 +1,4 @@
-"""Benchmark harness: times the engine's headline queries at
+"""Benchmark harness: times the engine's query keys at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
 ``local[$SPARK_GRAFT_CPUS]`` and prints TWO JSON lines -- a full-detail
 record (headline + extra_queries) first, then a compact FINAL line that
@@ -8,16 +8,29 @@ blob overflowed it in rounds 3-4):
     {"metric": "headline_total_wall", "value": <total sec>, "unit": "sec",
      "queries": {"<key>": <sec>, ...}, "sf": 0.1}
 
+Usage:
+    python bench.py              # HEADLINE, then every extra key
+    python bench.py key1 key2    # only these keys, same method
+
 ``queries`` is the FROZEN 32-key headline set benchmarked since round 2 —
 never add or remove keys there, so round-over-round totals stay
-comparable. New keys go into ``extra_queries`` (timed identically but
-kept OUT of the headline total).
+comparable.  Every other registered key, except the streaming keys in
+``STREAMING_EXCLUDED``, is an extra: timed identically, in registration
+order, but kept OUT of the headline total.  A newly registered key is
+therefore timed without editing this file.  Given keys, only those run
+(any registered key, streaming ones included); headline keys land under
+``queries``, all others under ``extra_queries``.  An unknown key exits 2.
 
 Method: one warm-up action to absorb JVM/codegen startup, then each query
 is executed twice and the best wall time is kept (steady-state number,
 immune to one-off JIT/IO noise). Queries are materialized with the noop
 writer — full execution on the executors, no driver-side row transfer, so
-the number measures the PLAN, not py4j serialization.
+the number measures the PLAN, not py4j serialization.  Each run's time
+is construction (the key's callable: driver-side plan building, py4j
+round trips, memo-building collects) plus execution; the detail line
+reports the construction part of run 1 (``construct_cold``) and run 2
+(``construct_warm``) for every timed key, and run 1's total for the
+headline (``queries_cold``) and the extras (``extra_queries_cold``).
 
 The headline set spans every operator family of SURVEY.md section 2
 (scan/filter, aggregation, join incl. asof, window, CDC compaction,
@@ -35,6 +48,9 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from mysql_clickhouse_replication_spark import QUERIES, load_all  # noqa: E402
+from mysql_clickhouse_replication_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -73,351 +89,6 @@ HEADLINE = [
     "text_pii_scrub",
 ]
 
-# Timed the same way but excluded from the headline total: keys that
-# joined the bench after the 32-key set froze (round 2). Promote nothing;
-# comparability of `value` across rounds is the point.
-EXTRA = [
-    "cdc_summing_merge",
-    "orders_active_coverage",
-    "docs_temperature_sample",
-    "cdc_snapshot_overlap_resolve",
-    "docs_license_filter",
-    "events_counter_delta_sum",
-    "cdc_column_mask_policy",
-    "cdc_dlq_replay_merge",
-    "agg_topk_weighted",
-    "orders_backlog_aging",
-    "cdc_ddl_route",
-    "cdc_type_edges",
-    "cdc_gtid_resume",
-    "cdc_binlog_position_order",
-    "events_sliding_uniques_sketch",
-    "win_analytic",
-    "win_frame_range",
-    "win_percent",
-    "sort_multi_key",
-    "topk_global",
-    "events_funnel",
-    "events_retention",
-    "dedup_cluster",
-    "sim_knn_classify",
-    "sim_range_search",
-    "text_langid",
-    "text_lm_score",
-    "agg_heavy_hitters",
-    "win_ntile",
-    "events_top_paths",
-    "sim_ivf_refine",
-    "events_anomaly_zscore",
-    "dedup_containment",
-    "join_asof_tolerance",
-    "fn_ip",
-    "fn_encoding",
-    "tpch_q7_shape",
-    "tpch_q8_shape",
-    "join_range_bucketed",
-    "tpch_q2_shape",
-    "tpch_q9_shape",
-    "tpch_q11_shape",
-    "tpch_q13_shape",
-    "tpch_q15_shape",
-    "tpch_q16_shape",
-    "tpch_q17_shape",
-    "tpch_q20_shape",
-    "tpch_q21_shape",
-    "tpch_q22_shape",
-    "agg_countmin_prefilter",
-    "join_anti_null_aware",
-    "profile_table",
-    "docs_chunk_overlap",
-    "docs_pack_sequences",
-    "embedding_quantize",
-    "sample_stratified",
-    "events_markov_transitions",
-    "events_rollup_hierarchy",
-    "fn_struct",
-    "docs_quality_filter_pipeline",
-    "stream_stream_join",
-    "events_gap_fill",
-    "win_ignore_nulls",
-    "agg_weighted_avg",
-    "events_histogram",
-    "cdc_pit_join",
-    "fn_null_family",
-    "dedup_incremental",
-    "join_dynamic_partition_prune",
-    "agg_mode",
-    "agg_hll_mergeable",
-    "events_attribution",
-    "analytics_rfm",
-    "text_normalize",
-    "sample_reservoir",
-    "join_asof_nearest",
-    "docs_mix_weighted",
-    "text_topn_ngrams",
-    "agg_bool_family",
-    "agg_array_topk",
-    "events_rolling_distinct",
-    "cdc_row_checksum",
-    "cdc_dlq_split",
-    "agg_map_sum",
-    "events_sequence_match",
-    "docs_contamination_check",
-    "cdc_conflict_lww",
-    "events_cohort_ltv",
-    "dedup_survivor_pick",
-    "events_ab_ztest",
-    "cdc_gap_check",
-    "text_entropy",
-    # --- round 4: full coverage of the remaining non-streaming keys
-    # (VERDICT r3 item 6) — cheap scalar/relational/agg/join/TPCH keys
-    # that had correctness evidence but no timing row.
-    "scan_parquet",
-    "scan_partition_filter",
-    "project_compute",
-    "filter_in_between_like",
-    "filter_null_semantics",
-    "case_when",
-    "sample_hash_based",
-    "reshape_pivot",
-    "reshape_unpivot",
-    "limit_offset",
-    "set_union_all",
-    "set_union_distinct",
-    "set_intersect",
-    "set_except",
-    "agg_hash_global",
-    "agg_count_distinct",
-    "agg_approx_distinct",
-    "agg_grouping_sets",
-    "agg_rollup",
-    "agg_cube",
-    "agg_minmax_by",
-    "agg_collect",
-    "agg_conditional",
-    "agg_distinct_rows",
-    "agg_skew_salted",
-    "agg_approx_percentiles",
-    "join_left_outer",
-    "join_full_outer",
-    "join_semi",
-    "join_anti",
-    "join_cross",
-    "join_theta_range",
-    "join_interval_overlap",
-    "join_bucketed_colocated",
-    "tpch_q3_shape",
-    "tpch_q4_shape",
-    "tpch_q6_shape",
-    "tpch_q10_shape",
-    "tpch_q12_shape",
-    "tpch_q14_shape",
-    "cdc_snapshot",
-    "cdc_decode",
-    "cdc_filter_tables",
-    "cdc_apply_delete",
-    "cdc_dedup_exact",
-    "cdc_type_cast",
-    "cdc_merge_into",
-    "cdc_schema_evolution",
-    "cdc_snapshot_increment",
-    "fn_string",
-    "fn_date",
-    "fn_math",
-    "fn_array",
-    "fn_map",
-    "fn_json",
-    "fn_hash",
-    "fn_url",
-    "fn_bitwise",
-    "fn_variant",
-    "text_stats",
-    "text_token_count",
-    "multimodal_join",
-    "multimodal_decode",
-    "multimodal_framesample",
-    "vector_group_rank",
-    "source_csv_roundtrip",
-    "source_json_roundtrip",
-    "source_orc_roundtrip",
-    # --- round 4 additions (MergeTree sink twins + pipeline ops).
-    "cdc_collapsing_sign",
-    "cdc_ttl_expiry",
-    "events_funnel_strict",
-    "sample_importance_weighted",
-    "docs_repetition_ratio",
-    "sim_product_quantize",
-    "agg_mergeable_moments",
-    "agg_weighted_percentile",
-    "events_ema_daily",
-    "sim_ann_recall",
-    "cdc_snapshot_diff",
-    "fn_timezone",
-    "dedup_minhash_accuracy",
-    # --- round 4, second wave (analytics/pipeline/ops diagnostics).
-    "events_streaks",
-    "agg_linreg",
-    "events_audience_overlap",
-    "sim_matryoshka_recall",
-    "fn_time_bucket",
-    "profile_skew",
-    "docs_block_dedup",
-    "docs_novelty_ratio",
-    "cdc_multi_table_route",
-    "cdc_replace_partition",
-    "cdc_lag_percentiles",
-    # --- round 4, third wave.
-    "events_session_duration",
-    "events_record_highs",
-    "cdc_tx_batches",
-    "docs_length_mad_outliers",
-    "sim_centroid_classify",
-    "fn_format",
-    # --- round 4, fourth wave.
-    "embedding_hard_negatives",
-    "cdc_backfill_plan",
-    "events_seasonality",
-    "scan_sorted_layout_prune",
-    "docs_dedup_pipeline",
-    # --- round 4, fifth wave.
-    "events_new_vs_returning",
-    "events_alert_rules",
-    "events_distribution_drift",
-    "text_langid_eval",
-    "docs_split_leakage_safe",
-    # --- round 4, sixth wave.
-    "cdc_snapshot_chunks",
-    "analytics_segment_migration",
-    "events_dormant_reactivation",
-    # --- round 4, seventh wave.
-    "sim_ivf_nprobe_sweep",
-    "events_conversion_latency",
-    "cdc_order_violations",
-    # --- round 4, eighth wave.
-    "join_null_skew_split",
-    "docs_shard_balance",
-    "cdc_freshness",
-    # --- round 4, ninth wave.
-    "sim_pq_adc_search",
-    "docs_ngram_coverage_eval",
-    "events_funnel_by_segment",
-    # --- round 4, tenth wave.
-    "cdc_column_drift_stats",
-    "agg_wow_change",
-    "events_peak_concurrency",
-    # --- round 4, eleventh wave.
-    "cdc_partitioned_changelog_prune",
-    "docs_language_balance",
-    "events_error_budget_burn",
-    # --- round 4, twelfth wave.
-    "events_rate_limit_scan",
-    "sim_centroid_drift",
-    # --- round 4, thirteenth wave.
-    "docs_vocab_growth",
-    "cdc_seq_coverage_ranges",
-    # --- round 4, fourteenth wave.
-    "fn_try_cast",
-    "dedup_source_matrix",
-    # --- round 4, fifteenth wave.
-    "events_bot_detection",
-    "orders_purchase_cadence",
-    # --- round 4, sixteenth wave.
-    "cdc_dedup_bounded_window",
-    "events_funnel_window_sensitivity",
-    # --- round 4, seventeenth wave.
-    "reshape_pivot_multi",
-    "text_entropy_rate",
-    # --- round 4, eighteenth wave (post-restart).
-    "win_reset_running_sum",
-    "agg_histogram_quantile",
-    "text_collocations_pmi",
-    "docs_url_dedup",
-    "cdc_compaction_ratio",
-    "join_bloom_prefilter",
-    # --- round 4, nineteenth wave.
-    "text_bm25_search",
-    "sim_hybrid_rrf",
-    "events_sliding_batch",
-    "orders_basket_lift",
-    # --- round 4, twentieth wave.
-    "fn_geo",
-    "win_time_range_frame",
-    # --- round 4, twenty-first wave.
-    "events_funnel_unordered",
-    "docs_substring_dedup",
-    # --- round 4, twenty-second wave.
-    "agg_bitmap_distinct",
-    "events_watermark_lateness",
-    "scan_zorder_layout",
-    # --- round 4, twenty-third wave.
-    "events_time_weighted_avg",
-    "orders_revenue_concentration",
-    "cdc_minimal_image_reconstruct",
-    # --- round 4, twenty-fourth wave.
-    "events_changepoint_cusum",
-    "cdc_tombstone_gc",
-    "fn_fuzzy_match",
-    "join_spatial_grid",
-    # --- round 4, twenty-fifth wave.
-    "events_growth_accounting",
-    "agg_hll_overlap_estimate",
-    "fn_business_days",
-    # --- round 7.
-    "cdc_ddl_apply",
-    "cdc_sink_wire",
-    # --- round 8.
-    "agg_exact_median",
-    "agg_exact_quantiles",
-    "cdc_wide_row_reassemble",
-    "multimodal_dedup",
-    "docs_balanced_downsample",
-    "source_parquet_schema_merge",
-    "graph_pagerank",
-    # --- round 9.
-    "agg_exact_quantiles_bucketed",
-    "docs_balanced_downsample_digest",
-    "dedup_semantic_prune",
-    "docs_perplexity_buckets",
-    "events_m4_downsample",
-    "cdc_schema_registry_compat",
-    # --- round 10.
-    "cdc_decode_sharded",
-    "docs_perplexity_buckets_nosort",
-    "graph_triangle_count",
-    "events_interval_coverage",
-    "docs_quality_signals_gopher",
-    "events_watermark_lateness_sharded",
-    # --- round 11.
-    "cdc_decode_multifile",
-    "text_bpe_merge_step",
-    "text_bpe_train_steps",
-    "cdc_ttl_rollup",
-    "embedding_gram_matrix",
-    "docs_epoch_shuffle",
-    "scan_bloom_skip_index",
-    "sim_pca_power_iteration",
-    "embedding_pca_project",
-    "text_bpe_fertility",
-    "scan_set_skip_index",
-    "scan_tokenbf_skip_index",
-    "embedding_pca_topk",
-    "sim_opq_rotate",
-    "text_bpe_train_to_vocab",
-    "docs_epoch_shuffle_write",
-    "scan_projection_route",
-    "text_bpe_encode",
-    "sim_ivfpq_search",
-    "sim_opq_train",
-    "sim_ivfpq_search_trained",
-    "docs_epoch_shuffle_read",
-    "docs_tokenize_pack",
-    # --- round 14.
-    "sim_ivfpq_residual",
-    "sim_opq_alternate",
-    "docs_epoch_shuffle_resume",
-    "cdc_heartbeat",
-]
-
 # Deliberately NOT timed — wall time is fixed micro-batch machinery
 # (~1-2 s trigger/sink constants per key at any SF), which at bench
 # scale measures Structured Streaming overhead, not operator
@@ -431,6 +102,12 @@ STREAMING_EXCLUDED = [
     "cdc_checkpoint", "cdc_sink_idempotent", "stream_resume_incremental",
 ]
 
+# Timed the same way but excluded from the headline total: every other
+# registered key, in registration order. Promote nothing; comparability
+# of `value` across rounds is the point.
+load_all()
+EXTRA = [k for k in QUERIES if k not in {*HEADLINE, *STREAMING_EXCLUDED}]
+
 N_RUNS = 2  # keep the best (steady-state) time per query
 
 
@@ -438,35 +115,40 @@ def _materialize(df) -> None:
     df.write.mode("overwrite").format("noop").save()
 
 
-def main() -> int:
-    import __spark_entry__ as e
-    from mysql_clickhouse_replication_spark.session import get_spark
+def main(argv: list[str] | None = None) -> int:
+    keys = list(dict.fromkeys(sys.argv[1:] if argv is None else argv))
+    unknown = [k for k in keys if k not in QUERIES]
+    if unknown:
+        print(f"unknown keys: {unknown}", file=sys.stderr)
+        return 2
+    keys = keys or HEADLINE + EXTRA
 
     spark = get_spark("bench")
-    qs = e.queries()
-    keys = [k for k in HEADLINE if k in qs]
+    _materialize(QUERIES["agg_groupby_multi"](spark, SF_DIR))  # warm-up
 
-    _materialize(qs["agg_groupby_multi"](spark, SF_DIR))  # warm-up
+    best: dict[str, float] = {}
+    cold: dict[str, float] = {}
+    construct: list[dict[str, float]] = [{} for _ in range(N_RUNS)]
+    for key in keys:
+        for i in range(N_RUNS):
+            t0 = time.perf_counter()
+            df = QUERIES[key](spark, SF_DIR)
+            t1 = time.perf_counter()
+            _materialize(df)
+            t2 = time.perf_counter()
+            construct[i][key] = round(t1 - t0, 3)
+            if i == 0:
+                cold[key] = round(t2 - t0, 3)
+            best[key] = min(best.get(key, float("inf")), round(t2 - t0, 3))
 
-    def run(
-        key_list: list[str],
-    ) -> tuple[dict[str, float], dict[str, float]]:
-        times: dict[str, float] = {}
-        cold: dict[str, float] = {}
-        for key in key_list:
-            best = float("inf")
-            for i in range(N_RUNS):
-                t0 = time.perf_counter()
-                _materialize(qs[key](spark, SF_DIR))
-                dt = time.perf_counter() - t0
-                if i == 0:
-                    cold[key] = round(dt, 3)
-                best = min(best, dt)
-            times[key] = round(best, 3)
-        return times, cold
+    def split(m: dict[str, float]) -> tuple[dict[str, float], dict[str, float]]:
+        return (
+            {k: v for k, v in m.items() if k in HEADLINE},
+            {k: v for k, v in m.items() if k not in HEADLINE},
+        )
 
-    times, _ = run(keys)
-    extra, extra_cold = run([k for k in EXTRA if k in qs])
+    times, extra = split(best)
+    times_cold, extra_cold = split(cold)
 
     sf_name = os.path.basename(SF_DIR.rstrip("/"))
     try:
@@ -493,6 +175,9 @@ def main() -> int:
                 # cold ~= best and costs nothing to record.
                 "extra_queries_cold": extra_cold,
                 "sf": sf,
+                "queries_cold": times_cold,
+                "construct_cold": construct[0],
+                "construct_warm": construct[1],
             }
         )
     )

@@ -338,8 +338,8 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     5.8 s at sf1, because 21M interpreted higher-order lambda evals
     lose badly to one Arrow batch of numpy einsum.  The pandas+window
     shape is the right plan at every measured scale; the 1.28x reading
-    was box noise (three quiet-box runs: 1.87-2.2 s in the time_keys
-    harness whose calibration offset vs the driver bench is +5-8%)."""
+    was box noise (three quiet-box runs: 1.87-2.2 s timing this key
+    alone, whose calibration offset vs the full bench is +5-8%)."""
     v = _vecs(spark, sf_dir).select("vec_id", "vec")
     # Clone ids live in the NEGATIVE id space (-vid - 1): fixture ids are
     # non-negative at every SF (sf1 replication shifts by +i*span), so a

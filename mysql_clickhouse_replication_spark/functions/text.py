@@ -25,8 +25,6 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -647,7 +645,7 @@ def _cluster_members(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _min_label_propagate(
-    und: DataFrame, rounds: int = 4, verify: bool | None = None
+    und: DataFrame, rounds: int = 4, verify: bool = False
 ) -> DataFrame:
     """Min-label propagation with POINTER JUMPING over an undirected
     edge frame (doc_a, doc_b).  Each round:
@@ -706,8 +704,6 @@ def _min_label_propagate(
             .select("v", F.col("lbl2").alias("lbl"))
             .localCheckpoint(eager=True)
         )
-    if verify is None:
-        verify = os.environ.get("SPARK_GRAFT_VERIFY_CC", "") == "1"
     if verify:
         # Convergence proof (r5 advice): the fixed-round schedule is
         # only correct for component diameter <= 30; past that,

@@ -844,11 +844,7 @@ def cdc_partitioned_changelog_prune(spark: SparkSession, sf_dir: str) -> DataFra
             F.lit("2024-01-08").cast("date"), F.lit("2024-01-21").cast("date")
         )
     )
-    w = Window.partitionBy("pk").orderBy(F.desc("seq"))
-    state = (
-        pruned.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("op") != "delete"))
-    )
+    state = compact(pruned, drop_deletes=True)
     rh = F.conv(
         F.substring(F.md5(F.concat_ws("|", "pk", "seq")), 1, 8), 16, 10
     ).cast("bigint")
@@ -971,17 +967,15 @@ def cdc_compaction_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     a different cadence than one at 1.05x.
 
     Shape: one pass computes per-table counts (map-side combined);
-    the live-row count needs last-op-per-pk, i.e. the standard
-    compaction window keyed (tbl, pk) — the SAME single shuffle every
-    cdc_apply_* key pays, here feeding a count instead of a
-    materialization.  At 100 TB both legs prune to touched partitions
+    the live-row count needs last-op-per-pk, i.e. ``compact`` (tbl is
+    a function of pk, so its pk window is the per-table one) — the SAME
+    single shuffle every cdc_apply_* key pays, here feeding a count
+    instead of a materialization.  At 100 TB both legs prune to touched partitions
     when the changelog is date-partitioned.  ALL outputs are exact
     integers — the two ratios are all-integer ppm floor divisions."""
     cl = _changelog(spark, sf_dir)
-    w = Window.partitionBy("tbl", "pk").orderBy(F.desc("seq"))
     last = (
-        cl.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        compact(cl)
         .groupBy("tbl")
         .agg(F.count_if(F.col("op") != "delete").alias("live_rows"))
     )
@@ -1156,20 +1150,16 @@ def cdc_tombstone_gc(spark: SparkSession, sf_dir: str) -> DataFrame:
     that still have earlier non-delete versions in the unmerged log —
     the resurrection-risk count an operator sizes the horizon by.
 
-    Shape: ONE (tbl, pk)-keyed compaction window feeds three bounded
-    rollups (the per-pk last-op table is the shared intermediate);
+    Shape: ONE ``compact`` window (pk-keyed; tbl is a function of pk)
+    feeds three bounded rollups (the per-pk last-op table is the
+    shared intermediate);
     the risk leg joins the changelog back to the PURGED-tombstONE set
     only — a key-pruned semi-join-shaped probe, not a second full
     compaction; the horizon is a 1-row broadcast.  All-integer
     outputs."""
     cl = _changelog(spark, sf_dir)
     horizon = cl.agg((F.max("seq") - _GC_HORIZON).alias("cutoff"))
-    w = Window.partitionBy("tbl", "pk").orderBy(F.desc("seq"))
-    last = (
-        cl.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("tbl", "pk", "op", "seq")
-    )
+    last = compact(cl).select("tbl", "pk", "op", "seq")
     exact = last.groupBy("tbl").agg(
         F.count_if(F.col("op") != "delete").alias("live_exact"),
         F.count_if(F.col("op") == "delete").alias("tombstones_total"),

@@ -232,17 +232,12 @@ def cdc_conflict_lww(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_lww = Window.partitionBy("pk").orderBy(
         F.desc("ts"), F.desc("source_id"), F.desc("seq")
     )
-    w_seq = Window.partitionBy("pk").orderBy(F.desc("seq"))
     lww = (
         log.withColumn("rn", F.row_number().over(w_lww))
         .filter(F.col("rn") == 1)
         .select("pk", F.col("value").alias("lww_value"))
     )
-    seqw = (
-        log.withColumn("rn", F.row_number().over(w_seq))
-        .filter(F.col("rn") == 1)
-        .select("pk", F.col("value").alias("seq_value"))
-    )
+    seqw = compact(log).select("pk", F.col("value").alias("seq_value"))
     return lww.join(seqw, "pk").select(
         "pk", "lww_value", "seq_value",
         (F.col("lww_value") != F.col("seq_value")).cast("int").alias("differs"),

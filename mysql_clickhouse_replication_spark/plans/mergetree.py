@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..session import table
-from .cdc import decode_events
+from .cdc import compact, decode_events
 
 # The shared changelog decode (kept in lockstep with plans/cdc.py's
 # _DECODE_SQL; only the columns this module needs).
@@ -296,14 +296,9 @@ def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut = decoded.agg(
         F.floor(F.max("seq") * 0.6).cast("bigint").alias("c")
     )
-    w = Window.partitionBy("pk").orderBy(F.desc("seq"))
 
     def state(log):
-        return (
-            log.withColumn("rn", F.row_number().over(w))
-            .filter((F.col("rn") == 1) & (F.col("op") != "delete"))
-            .select("pk", "value", "prop_k")
-        )
+        return compact(log, drop_deletes=True).select("pk", "value", "prop_k")
 
     s1 = state(
         decoded.crossJoin(F.broadcast(cut)).filter(F.col("seq") <= F.col("c"))
@@ -429,11 +424,8 @@ def summing_ledger(decoded: DataFrame) -> DataFrame:
         .groupBy("pk")
         .agg(F.count(F.lit(1)).alias("n_deltas"), F.sum("delta").alias("net"))
     )
-    wlast = Window.partitionBy("pk").orderBy(F.desc("seq"))
-    state = (
-        decoded.withColumn("rn", F.row_number().over(wlast))
-        .filter(F.col("rn") == 1)
-        .select("pk", F.col("op").alias("last_op"), F.col("value").alias("last_value"))
+    state = compact(decoded).select(
+        "pk", F.col("op").alias("last_op"), F.col("value").alias("last_value")
     )
     live = F.col("last_op") != "delete"
     expect = F.when(live, F.col("last_value").cast(d12)).otherwise(zero)

@@ -6,8 +6,9 @@ rows rather than an oracle engine."""
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
+
+from mysql_clickhouse_replication_spark.plans.cdc import compact
 
 # (op, pk, seq, value) — seq is the binlog position stand-in
 CHANGELOG = [
@@ -25,17 +26,10 @@ CHANGELOG = [
 ]
 
 
-def _compact(df, keep_deletes: bool):
-    w = Window.partitionBy("pk").orderBy(F.desc("seq"))
-    out = df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
-    if not keep_deletes:
-        out = out.filter(F.col("op") != "delete")
-    return out.select("pk", "seq", "op", "value")
-
-
 def test_upsert_keeps_latest_version_per_pk(spark):
     df = spark.createDataFrame(CHANGELOG, "op string, pk long, seq long, value double")
-    got = {r.pk: (r.seq, r.op, r.value) for r in _compact(df, True).collect()}
+    out = compact(df).select("pk", "seq", "op", "value")
+    got = {r.pk: (r.seq, r.op, r.value) for r in out.collect()}
     assert got == {
         1: (3, "update", 11.0),
         2: (5, "delete", None),
@@ -47,7 +41,8 @@ def test_upsert_keeps_latest_version_per_pk(spark):
 
 def test_delete_apply_drops_tombstoned_pks(spark):
     df = spark.createDataFrame(CHANGELOG, "op string, pk long, seq long, value double")
-    got = {r.pk: r.value for r in _compact(df, False).collect()}
+    out = compact(df, drop_deletes=True).select("pk", "seq", "op", "value")
+    got = {r.pk: r.value for r in out.collect()}
     # pk 2's latest event is the delete -> gone; pk 3 was re-inserted -> alive
     assert got == {1: 11.0, 3: 31.0, 4: 41.0, 5: 50.0}
 
@@ -61,8 +56,8 @@ def test_exact_dedup_collapses_redelivery(spark):
 
 def test_compaction_is_idempotent(spark):
     df = spark.createDataFrame(CHANGELOG, "op string, pk long, seq long, value double")
-    once = _compact(df, True)
-    twice = _compact(once, True)
+    once = compact(df).select("pk", "seq", "op", "value")
+    twice = compact(once).select("pk", "seq", "op", "value")
     assert sorted(map(tuple, once.collect())) == sorted(map(tuple, twice.collect()))
 
 

@@ -322,10 +322,9 @@ def test_no_module_memo_outside_session():
     assert not found, "\n".join(found)
 
 
-def test_one_event_op_map():
-    """The event->op map is written once, as binlog_wire.OP_SQL; no
-    package module re-spells it as a ``F.when`` chain.  Plain signup
-    filters (cohort and storm keys) are not op maps and stay legal."""
+def _package_grep(pattern: str) -> list[tuple[str, int, str]]:
+    """``(path, line number, text)`` of every package source line that
+    matches ``pattern``; paths are relative to the package root."""
     import glob
     import os
     import re
@@ -334,16 +333,77 @@ def test_one_event_op_map():
         os.path.dirname(__file__), os.pardir,
         "mysql_clickhouse_replication_spark",
     )
-    spelled = re.compile(
-        r"""F\.when\(\s*F\.col\(\s*["']event_type["']\s*\)\s*==\s*["']signup["']"""
-    )
-    found = [
-        f"{os.path.relpath(path, pkg)}:{i}: {ln.strip()}"
+    rx = re.compile(pattern)
+    return [
+        (os.path.relpath(path, pkg), i, ln.strip())
         for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)
         for i, ln in enumerate(open(path), start=1)
-        if spelled.search(ln)
+        if rx.search(ln)
     ]
-    assert not found, "\n".join(found)
+
+
+def test_one_event_op_map():
+    """The event->op map is written once, as binlog_wire.OP_SQL; no
+    package module re-spells it as a ``F.when`` chain.  Plain signup
+    filters (cohort and storm keys) are not op maps and stay legal."""
+    found = _package_grep(
+        r"""F\.when\(\s*F\.col\(\s*["']event_type["']\s*\)\s*==\s*["']signup["']"""
+    )
+    assert not found, "\n".join(map(str, found))
+
+
+def test_one_final_rule():
+    """ReplacingMergeTree FINAL (latest seq per pk wins) is written once,
+    in plans.cdc.compact; every other site calls it instead of
+    hand-rolling the ``row_number`` window over descending seq."""
+    import inspect
+
+    from mysql_clickhouse_replication_spark.plans import cdc
+
+    lines, start = inspect.getsourcelines(cdc.compact)
+    inside = range(start, start + len(lines))
+    found = _package_grep(r"""orderBy\(\s*F\.desc\(\s*["']seq["']\s*\)\s*\)""")
+    outside = [
+        f for f in found if not (f[0] == "plans/cdc.py" and f[1] in inside)
+    ]
+    assert len(found) - len(outside) == 1  # the rule itself, in compact
+    assert not outside, "\n".join(map(str, outside))
+
+
+def test_bench_times_every_registered_key(spark, sf_dir, monkeypatch, capsys):
+    """bench.py's three key lists partition the registry: the frozen
+    32-key HEADLINE, the streaming keys it never times, and every other
+    key as an extra, so a new key is timed without editing bench.py.
+    Given keys, it times only those (headline keys under ``queries``,
+    the rest under ``extra_queries``) and reports each key's construct
+    time; an unknown key exits 2 before Spark runs anything."""
+    import json
+
+    import bench
+    from mysql_clickhouse_replication_spark import QUERIES
+
+    lists = (bench.HEADLINE, bench.STREAMING_EXCLUDED, bench.EXTRA)
+    head, stream, extra = map(set, lists)
+    assert len(bench.HEADLINE) == len(head) == 32
+    assert head | stream | extra == set(QUERIES)
+    assert sum(map(len, lists)) == len(QUERIES)  # disjoint, no repeats
+
+    monkeypatch.setattr(bench, "SF_DIR", sf_dir)
+    capsys.readouterr()
+    assert bench.main(["agg_groupby_multi", "cdc_decode"]) == 0
+    detail, final = map(json.loads, capsys.readouterr().out.splitlines())
+    both = {"agg_groupby_multi", "cdc_decode"}
+    assert set(final) == {"metric", "value", "unit", "queries", "sf"}
+    assert final["metric"] == "headline_total_wall"
+    assert set(final["queries"]) == set(detail["queries"]) == {"agg_groupby_multi"}
+    assert set(detail["queries_cold"]) == {"agg_groupby_multi"}
+    assert set(detail["extra_queries"]) == {"cdc_decode"}
+    assert set(detail["extra_queries_cold"]) == {"cdc_decode"}
+    assert set(detail["construct_cold"]) == set(detail["construct_warm"]) == both
+    assert final["value"] == detail["value"] == final["queries"]["agg_groupby_multi"]
+
+    assert bench.main(["agg_groupby_multi", "no_such_key"]) == 2
+    assert capsys.readouterr().out == ""
 
 
 def _write_proof(d, rnd, rows):

@@ -11,6 +11,14 @@ structural gate: an oracle may not expose HUGEINT / DECIMAL / BOOLEAN /
 LIST / STRUCT / MAP output columns.  DATE is proven safe (13 green
 driver rows).
 
+This is the oracle half of the canonicalizer-hazard check; the Spark
+half is tools/pandas_gate_sim.py, which compares each key's pandas
+dtype class against its oracle's.  A Spark ARRAY/MAP output needs a
+LIST/MAP oracle column (schemas must match), which this lint bans; a
+Spark DECIMAL output arrives as object(Decimal) and fails the class
+compare there.  Together they cover every output-schema hazard a
+Spark-side schema scan would flag.
+
 Usage: python tools/oracle_dtype_lint.py        # all keys, exit 1 on hit
 """
 

@@ -22,7 +22,12 @@ DuckDB oracle -> .df(), and the two frames must agree on
   exact double, datetimes as ISO strings.
 
 Any mismatch here that verify_local.py passes is a canonicalizer
-hazard of exactly the class that burned rounds 3-5.
+hazard of exactly the class that burned rounds 3-5.  It is the Spark
+half of the hazard check (a Spark DECIMAL output fails the dtype-class
+compare); the oracle half is tools/oracle_dtype_lint.py, which needs
+no Spark and bans the LIST/MAP oracle columns an ARRAY/MAP output
+needs.  Run both over all keys (``pandas_gate_sim.py 350``) after
+adding or changing a key.
 
 Usage: python tools/pandas_gate_sim.py [N]   (default: first 60 keys)
 """
