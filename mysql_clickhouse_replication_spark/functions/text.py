@@ -159,8 +159,8 @@ def _minhash_band_frames(sh: DataFrame) -> tuple[DataFrame, DataFrame]:
     ~400 py4j round trips (48 x min/xxhash64/lit/col/alias plus 24 band
     structs), all paid at query CONSTRUCTION — inside the bench's timed
     region — while the string form builds the IDENTICAL analyzed plan in
-    one JVM call per expression (the r14 _local_1row_sql lesson applied
-    to wide aggregates)."""
+    one JVM call per expression (the one-SQL-string rule of
+    operators._util.values_df, applied to wide aggregates)."""
     n_hashes = _N_BANDS * _BAND_ROWS
     exploded = sh.select("doc_id", F.explode("shingles").alias("sh"))
     sigs = exploded.groupBy("doc_id").agg(

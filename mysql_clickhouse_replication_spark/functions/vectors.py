@@ -34,6 +34,7 @@ from pyspark.sql.functions import pandas_udf
 
 from ..registry import register
 from ..session import table
+from .ann_index import _nearest_sql
 
 _N_QUERIES = 10  # query set: vec_id < 10
 _K_CENTROIDS = 16  # IVF cells: centroids = embeddings of vec_id < 16
@@ -628,13 +629,7 @@ def sim_product_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
             " (x, y) -> (x - y) * (x - y)),"
             " cast(0.0 as double), (acc, x) -> acc + x), 6)"
         )
-        out = out.withColumn(
-            f"b{m}",
-            F.expr(
-                f"array_min(transform(cents,"
-                f" c -> named_struct('d', {dist}, 'k', c.cid)))"
-            ),
-        )
+        out = out.withColumn(f"b{m}", F.expr(_nearest_sql("cents", dist)))
     total = F.col("b0.d")
     for m in range(1, _PQ_M):  # fixed left-to-right order, matching the oracle
         total = total + F.col(f"b{m}.d")

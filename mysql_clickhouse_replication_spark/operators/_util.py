@@ -231,27 +231,63 @@ def ntile_from_rank(rank: Column, n: Column, k: int) -> Column:
     )
 
 
-def _sql_lit(v) -> str:
-    """One Python value as a foldable SQL literal (strings quoted with
-    '' escaping, lists as array(...) constructors, None as NULL)."""
+def _ddl_split(ddl: str) -> list[str]:
+    """``ddl`` split at the commas outside ``<...>`` and ``(...)``: the
+    columns of a schema string or the fields of a struct type."""
+    parts, depth, cur = [], 0, ""
+    for ch in ddl:
+        depth += (ch in "<(") - (ch in ">)")
+        if ch == "," and depth == 0:
+            parts.append(cur.strip())
+            cur = ""
+        else:
+            cur += ch
+    return parts + [cur.strip()]
+
+
+def _sql_lit(v, t: str) -> str:
+    """One Python value as a foldable SQL literal of exactly the DDL type
+    ``t``, with no CAST over a complex value (a CAST to a DDL array or
+    struct type makes every element and field nullable, and Catalyst
+    then guards joins on them with ``isnotnull`` filters):
+
+    * ``bigint`` -> ``5L``;
+    * ``array<T>`` -> ``array(...)`` of T literals; an empty list is a
+      typed empty array, so lambdas over its fields still resolve;
+    * ``struct<f:T, ...>`` -> ``named_struct`` in the type's field
+      order, reading ``v[f]`` (a dict or a Row);
+    * ``int``, ``string`` and ``boolean`` -> the plain literal (strings
+      quoted with '' escaping); any other scalar, or None, is a CAST of
+      it, which keeps a non-null value non-null."""
+    low = t.lower()
     if v is None:
-        return "NULL"
+        return f"CAST(NULL AS {t})"
+    if low.startswith("array<"):
+        if not v:
+            return f"CAST(array() AS {t})"
+        return "array(" + ", ".join(_sql_lit(x, t[6:-1]) for x in v) + ")"
+    if low.startswith("struct<"):
+        fields = []
+        for f in _ddl_split(t[7:-1]):
+            name, ftype = (x.strip() for x in f.split(":", 1))
+            fields.append(f"'{name}', {_sql_lit(v[name], ftype)}")
+        return "named_struct(" + ", ".join(fields) + ")"
+    if low in ("bigint", "long"):
+        return f"{int(v)}L"
     if isinstance(v, bool):
-        return "true" if v else "false"
-    if isinstance(v, str):
-        return "'" + v.replace("'", "''") + "'"
-    if isinstance(v, int):
-        return str(v)
-    if isinstance(v, float):
-        return repr(v)
-    if isinstance(v, (list, tuple)):
-        return "array(" + ", ".join(_sql_lit(x) for x in v) + ")"
-    raise TypeError(f"unsupported literal type: {type(v)!r}")
+        lit = "true" if v else "false"
+    elif isinstance(v, str):
+        lit = "'" + v.replace("'", "''") + "'"
+    elif isinstance(v, (int, float)):
+        lit = repr(v)
+    else:
+        raise TypeError(f"unsupported literal type: {type(v)!r}")
+    return lit if low in ("int", "string", "boolean") else f"CAST({lit} AS {t})"
 
 
 def values_df(spark, rows, schema: str):
-    """Bounded literal rows as a TRUE LocalRelation: VALUES + a foldable
-    cast projection, collapsed by ConvertToLocalRelation.
+    """Bounded literal rows as a TRUE LocalRelation: an inline VALUES
+    table of literals typed by ``schema`` (see ``_sql_lit``).
 
     Replaces ``spark.createDataFrame(rows, schema)`` for constant dims:
     createDataFrame(list) is RDD-backed, so every materialization or
@@ -259,29 +295,19 @@ def values_df(spark, rows, schema: str):
     sliced micro-job (measured ~0.1-1 s per frame on local[32], and a
     scheduler round-trip per job on a real cluster), while a
     LocalRelation collects driver-side and broadcasts without launching
-    a job; string/array/timestamp columns work as well as ints.
+    a job; string/array/struct/timestamp columns work as well as ints.
+    One SQL string, not Column literals: trained-state frames carry
+    hundreds of values, and one py4j round trip per ``F.lit`` was
+    measured at ~2 s of driver-side construction per Lloyd round.
     ``schema`` is the same "name type, ..." DDL string createDataFrame
     took, so call sites swap 1:1."""
-    cols: list[str] = []
-    depth, cur = 0, ""
-    for ch in schema:
-        if ch == "<":
-            depth += 1
-        elif ch == ">":
-            depth -= 1
-        if ch == "," and depth == 0:
-            cols.append(cur)
-            cur = ""
-        else:
-            cur += ch
-    cols.append(cur)
-    pairs = [c.strip().split(None, 1) for c in cols]
+    pairs = [c.split(None, 1) for c in _ddl_split(schema)]
     if not rows:  # VALUES needs >= 1 row; emit a typed empty frame
         sel = ", ".join(f"CAST(NULL AS {t}) AS {n}" for n, t in pairs)
         return spark.sql(f"SELECT {sel} WHERE 1 = 0")
     vals = ", ".join(
-        "(" + ", ".join(_sql_lit(v) for v in r) + ")" for r in rows
+        "(" + ", ".join(_sql_lit(v, t) for v, (_n, t) in zip(r, pairs)) + ")"
+        for r in rows
     )
     names = ", ".join(n for n, _ in pairs)
-    sel = ", ".join(f"CAST({n} AS {t}) AS {n}" for n, t in pairs)
-    return spark.sql(f"SELECT {sel} FROM (VALUES {vals}) AS t({names})")
+    return spark.sql(f"SELECT * FROM (VALUES {vals}) AS t({names})")

@@ -63,7 +63,7 @@ def load_all() -> None:
         tpch_full,
         windows,
     )
-    from .functions import pipeline, quality, scalar, text, vectors  # noqa: F401
+    from .functions import pipeline, ann_index, quality, scalar, text, vectors  # noqa: F401
     from .plans import cdc, ddl, integrity, mergetree  # noqa: F401
     from .sources import formats  # noqa: F401
     from .streaming import batch_twin, queries as streaming_queries  # noqa: F401

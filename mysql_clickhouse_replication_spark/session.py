@@ -1,10 +1,14 @@
 """SparkSession factory and fixture loading.
 
-Scale notes (100 TB design intent, tested on local[32]):
+Scale notes (100 TB design intent; tested locally on 4 to 32 cores):
 
 * AQE on — runtime coalescing, skew-join splitting, and join-strategy
   switching are the first line of defense on a real cluster.
-* ``spark.sql.shuffle.partitions`` defaults to 32 locally (match cores);
+* Locally the master is ``local[n]`` for the n CPUs this process may
+  run on, and the driver heap is half the host's memory, at most 16g
+  (``local_defaults``); ``SPARK_GRAFT_CPUS`` and
+  ``SPARK_GRAFT_DRIVER_MEM`` override them.
+* ``spark.sql.shuffle.partitions`` defaults to the core count locally;
   on a 1000-executor cluster this is overridden to ~2-4x total cores via
   ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` — AQE coalesces the excess.
 * Session timezone pinned to UTC: fixtures carry naive timestamps and the
@@ -53,6 +57,13 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _PRUNED_FAMILIES: set[str] = set()
 
 
+def local_defaults(n_cpus: int, mem_bytes: int) -> tuple[str, str]:
+    """(core count, driver heap) for a host with ``n_cpus`` usable CPUs
+    and ``mem_bytes`` of physical memory: every usable CPU, and half
+    the memory in MiB, at most 16g, so the JVM fits a small host."""
+    return str(n_cpus), f"{min(mem_bytes // 2**21, 16 * 1024)}m"
+
+
 def get_spark(app_name: str = "mysql_clickhouse_replication_spark") -> SparkSession:
     """Build (or reuse) the engine's SparkSession with scale-aware defaults.
 
@@ -68,7 +79,11 @@ def get_spark(app_name: str = "mysql_clickhouse_replication_spark") -> SparkSess
     (a fixed module, no daemon) and the data-source planner workers
     (``pyspark.daemon`` hard-wired).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, heap = local_defaults(
+        len(os.sched_getaffinity(0)),
+        os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"),
+    )
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", cpus)
     shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -79,7 +94,7 @@ def get_spark(app_name: str = "mysql_clickhouse_replication_spark") -> SparkSess
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", heap))
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", f"{__package__}.pydaemon")
         .config("spark.executorEnv.PYTHONPATH", _REPO)

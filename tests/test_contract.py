@@ -370,6 +370,50 @@ def test_one_final_rule():
     assert not outside, "\n".join(map(str, outside))
 
 
+def test_one_nearest_centroid_rule():
+    """The rule that assigns a vector to its nearest centroid (and the
+    IVF probe's n nearest cells) is written once, in
+    ``ann_index._nearest_sql``; PQ encode, OPQ training and IVF routing
+    all call it."""
+    import inspect
+
+    from mysql_clickhouse_replication_spark.functions import ann_index
+
+    lines, start = inspect.getsourcelines(ann_index._nearest_sql)
+    inside = range(start, start + len(lines))
+    found = _package_grep(r"named_struct\('d'")
+    outside = [
+        f for f in found
+        if not (f[0] == "functions/ann_index.py" and f[1] in inside)
+    ]
+    assert len(found) - len(outside) == 1
+    assert not outside, "\n".join(map(str, outside))
+
+
+def test_one_literal_builder():
+    """Literal frames are built by ``operators._util.values_df`` from
+    ``_sql_lit``'s typed literals; the one-row SELECT-over-VALUES
+    helpers and their private array and struct spellers are gone."""
+    found = _package_grep(
+        r"FROM VALUES \(1\)|_sql_larr|_local_1row_sql|_cents_sql"
+        r"|_opq_cball_lit"
+    )
+    assert not found, "\n".join(map(str, found))
+
+
+def test_local_defaults_follow_the_host():
+    """With SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM unset, get_spark
+    runs on every CPU the process may use, with half the host's memory
+    as driver heap, at most 16g."""
+    from mysql_clickhouse_replication_spark.session import local_defaults
+
+    gib = 2**30
+    assert local_defaults(4, 16 * gib) == ("4", "8192m")
+    assert local_defaults(1, 3 * gib) == ("1", "1536m")
+    assert local_defaults(96, 32 * gib) == ("96", "16384m")
+    assert local_defaults(64, 512 * gib) == ("64", "16384m")
+
+
 def test_bench_times_every_registered_key(spark, sf_dir, monkeypatch, capsys):
     """bench.py's three key lists partition the registry: the frozen
     32-key HEADLINE, the streaming keys it never times, and every other

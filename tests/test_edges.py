@@ -639,7 +639,7 @@ def test_py_ss_matches_both_engines_on_sign_grid(spark):
     Lloyd means) leans on exactly this identity."""
     import duckdb
 
-    from mysql_clickhouse_replication_spark.functions.pipeline import (
+    from mysql_clickhouse_replication_spark.functions.ann_index import (
         _pca_ss,
         _py_ss,
     )
@@ -673,7 +673,7 @@ def test_opq_rot_frame_literal_matches_collected_chain(spark, sf_dir):
     comparing bit-for-bit."""
     from pyspark.sql import functions as F
 
-    from mysql_clickhouse_replication_spark.functions.pipeline import (
+    from mysql_clickhouse_replication_spark.functions.ann_index import (
         _OPQ_TARGETS,
         _PCA_TOPK,
         _collect_basis_vecs,
@@ -760,7 +760,7 @@ def test_pca_matvec_guard_measured_and_loud(spark):
     with it the guard) to plan-time Python — below the bound the guard
     is a no-op; above it query CONSTRUCTION raises, strictly earlier
     than the former in-plan raise_error form."""
-    from mysql_clickhouse_replication_spark.functions.pipeline import (
+    from mysql_clickhouse_replication_spark.functions.ann_index import (
         _PCA_MATVEC_HEADROOM,
         _py_guard_gmax,
     )
@@ -800,7 +800,7 @@ def test_gram_memo_repersists_after_clearcache(spark, sf_dir):
     memoized gram persist; a memo hit must re-pin it so "computed once
     per session" doesn't silently degrade to a recomputation per
     action."""
-    from mysql_clickhouse_replication_spark.functions.pipeline import (
+    from mysql_clickhouse_replication_spark.functions.ann_index import (
         _gram_cells,
     )
     from mysql_clickhouse_replication_spark.session import _plan_is_cached
@@ -1581,7 +1581,7 @@ def test_opq_ivf_state_typed_empty_without_centroid_rows(
     untyped ``array()`` failed analysis of the ``c.cid`` / ``c.cv``
     lambdas at construction — and every corpus row still gets its
     (empty-codebook) argmin columns."""
-    from mysql_clickhouse_replication_spark.functions.pipeline import (
+    from mysql_clickhouse_replication_spark.functions.ann_index import (
         _ivf_centroids_frame,
         _opq_spaces,
     )
@@ -1600,6 +1600,51 @@ def test_opq_ivf_state_typed_empty_without_centroid_rows(
     ivfc = _ivf_centroids_frame(spark, str(d))
     assert ivfc.dtypes == [("ivfc", typed)]
     assert [tuple(r) for r in ivfc.collect()] == [([],)]
+
+
+def test_ann_keys_on_empty_embeddings(spark, sf_dir, tmp_path):
+    """The ten vector-index keys on an embeddings table with no rows
+    (every other table the sf fixture's) match their DuckDB oracles,
+    which return no rows: the plan-time power iteration divides by 1
+    on an empty iterate instead of raising on ``max()`` of nothing, and
+    the OPQ distortion surfaces emit no row for a subspace with no
+    vectors, like the oracles' GROUP BY."""
+    from tools.verify_local import _hash_rows
+
+    for name in os.listdir(sf_dir):
+        if name != "embeddings.parquet":
+            os.symlink(os.path.join(sf_dir, name), tmp_path / name)
+    con = duckdb.connect()
+    con.execute(
+        f"COPY (SELECT * FROM read_parquet('{sf_dir}/embeddings.parquet')"
+        f" LIMIT 0) TO '{tmp_path}/embeddings.parquet' (FORMAT parquet)"
+    )
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM"
+        f" read_parquet('{tmp_path}/embeddings.parquet')"
+    )
+    keys = (
+        "embedding_gram_matrix", "sim_pca_power_iteration",
+        "embedding_pca_project", "embedding_pca_topk", "sim_opq_rotate",
+        "sim_ivfpq_search", "sim_opq_train", "sim_ivfpq_search_trained",
+        "sim_opq_alternate", "sim_ivfpq_residual",
+    )
+    failures = []
+    for key in keys:
+        try:
+            sdf = e.queries()[key](spark, str(tmp_path))
+            srows = [tuple(r) for r in sdf.collect()]
+        except Exception as exc:  # report every key, not just the first
+            failures.append(f"{key}: {type(exc).__name__}: {exc}"[:300])
+            continue
+        res = con.execute(e.oracle_sql()[key])
+        ocols = [d[0] for d in res.description]
+        orows = res.fetchall()
+        if sorted(sdf.columns) != sorted(ocols) or _hash_rows(
+            sdf.columns, srows
+        ) != _hash_rows(ocols, orows):
+            failures.append(f"{key}: {len(srows)} rows vs {len(orows)}")
+    assert not failures, "\n".join(failures)
 
 
 class _FakeFrame:

@@ -2070,9 +2070,9 @@ def test_gram_matrix_partial_agg_no_python(plans):
     and a memo hit renders as InMemoryTableScan instead of the parquet
     scan — evict it first so the audited plan is the one that runs at
     scale."""
-    from mysql_clickhouse_replication_spark.functions import pipeline
+    from mysql_clickhouse_replication_spark.functions import ann_index
 
-    memo = pipeline._gram_cells.memo
+    memo = ann_index._gram_cells.memo
     for k in list(memo):
         memo.pop(k)[0].unpersist()
     p = plans("embedding_gram_matrix")
@@ -2275,6 +2275,21 @@ def test_ivfpq_residual_plan_broadcast_only(plans):
     assert "BatchEvalPython" not in p and "MapInPandas" not in p
     simple = plans("sim_ivfpq_residual", "simple")
     assert simple.count("Exchange hashpartitioning") <= 4, simple
+
+
+def test_ivf_search_cells_not_null_guarded(spark, sf_dir):
+    """The trained-state literals carry their exact types: the IVF
+    centroid and codebook frames come from ``values_df`` as
+    ``named_struct`` literals whose ``cid`` fields are non-null, so the
+    probed cell ``pcid`` is non-null and Catalyst adds no
+    ``isnotnull(pcid)`` filter to the candidate join.  A literal typed
+    by a CAST to its DDL struct type instead makes every field
+    nullable, and the filter appears in all three IVF search keys."""
+    qs = e.queries()
+    for key in ("sim_ivfpq_search", "sim_ivfpq_search_trained",
+                "sim_ivfpq_residual"):
+        plan = qs[key](spark, sf_dir)._jdf.queryExecution().optimizedPlan()
+        assert "isnotnull(pcid" not in plan.toString(), key
 
 
 def test_epoch_resume_plan_no_global_sort(plans):
