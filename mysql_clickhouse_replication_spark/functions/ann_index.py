@@ -1101,6 +1101,10 @@ def _opq_spaces(
             dist = _opq_sqd(vec, "c.cv", lo, _OPQ_D)
             argmins.append(f"{_nearest_sql(cc, dist)} AS {tag}b{m}")
     out = both.crossJoin(F.broadcast(cents)).selectExpr("*", *argmins)
+    if not crow["rcents"]:
+        # No vec_id < _OPQ_K, so no codeword: like the oracle's argmin
+        # over an empty codebook, no vector gets a code.
+        out = out.limit(0)
     return both, cents, out
 
 
@@ -1579,6 +1583,8 @@ def _opq_train_state(
                 F.sum("d").alias("sd"),
             )
             .collect()
+            if cb  # no codeword, no assignment (every argmin is NULL)
+            else []
         )
         srows = [
             (int(r0["m"]), int(r0["cid"]), int(r0["dim"]),
@@ -2037,16 +2043,16 @@ def sim_opq_alternate(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames = _pca_topk_frames(spark, sf_dir, n=_PCA_TOPK + 1)
     vecs = _collect_basis_vecs(frames)  # d rows x 4 frames, bounded
     basis, d4 = vecs[: _PCA_TOPK], vecs[_PCA_TOPK]
-    if not d4:
-        # An empty gram (no embeddings): the global distortion sums
-        # below would each give one NULL row where the oracle's GROUP BY
-        # m gives none.
+    _, cb = _opq_train_state(spark, sf_dir)
+    if not cb:
+        # No codeword (no embeddings, or none with vec_id < _OPQ_K): the
+        # global distortion sums below would each give one NULL row
+        # where the oracle's GROUP BY m gives none.
         return values_df(
             spark, [],
             "cand int, m int, distortion bigint, cand_total bigint,"
             " chosen int",
         )
-    _, cb = _opq_train_state(spark, sf_dir)
     cb1 = values_df(spark, [(cb,)], _CBALL)  # driver-held codebook
     corpus = _opq_fixed_corpus(spark, sf_dir)
     inc_hws = _py_chain_hws(basis)

@@ -52,28 +52,13 @@ def _vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cos_expr(a: Column, b: Column) -> Column:
-    """cosine(a, b) as pure SQL array expressions (zip_with + aggregate).
-    JVM-side but higher-order functions evaluate interpreted per element —
-    fine for small batches, dominated by _cos below for bulk scoring."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    na = F.sqrt(
-        F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x)
-    )
-    nb = F.sqrt(
-        F.aggregate(F.transform(b, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x)
-    )
-    return dot / (na * nb)
-
-
 def _cos_vec_fn(a: pd.Series, b: pd.Series) -> pd.Series:
     """Vectorized cosine over Arrow batches: one numpy matmul-shaped pass
-    per batch instead of per-element interpreted lambdas — ~4x faster at
-    bench scale and THE shape for bulk scoring at 100 TB. dot/(|a|*|b|)
-    formula matches _cos_expr and the DuckDB oracle; callers round to 6
-    decimals before ranking, far above the ~1e-15 summation-order noise."""
+    per batch instead of per-element interpreted zip_with/aggregate
+    lambdas — ~4x faster at bench scale and THE shape for bulk scoring
+    at 100 TB. The dot/(|a|*|b|) formula matches the DuckDB oracle;
+    callers round to 6 decimals before ranking, far above the ~1e-15
+    summation-order noise."""
     valid = a.notna().to_numpy() & b.notna().to_numpy()
     if not valid.all():
         # null-safe path (e.g. dedup_embedding's cold cells left-join a

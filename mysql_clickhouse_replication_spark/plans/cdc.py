@@ -49,6 +49,16 @@ SELECT CASE WHEN event_type = 'signup' THEN 'insert'
 FROM events
 """
 
+# The changelog every binlog decode key and stream sink lands: the
+# one oracle text of those keys.
+_DECODE_ORACLE = """
+SELECT CASE WHEN event_type = 'signup' THEN 'insert'
+            WHEN event_type = 'error'  THEN 'delete'
+            ELSE 'update' END AS op,
+       user_id AS pk, event_id AS seq, value
+FROM events
+"""
+
 
 def decode_events(ev: DataFrame, *extra) -> DataFrame:
     """events rows (batch or streaming) -> (op, pk, seq, value, *extra):
@@ -1456,17 +1466,16 @@ def decode_ranges(
     the UDF runs (docs/OPERATORS.md): for a small log the task count,
     not the decode, sets the cost.
 
-    Each task performs RANGED reads of its bytes (seek + read, the
-    object-store GET-range shape), adjacent ranges of one file merged
-    into one read, re-framed behind a fresh MAGIC for the decoder.
+    Each task maps its files (binlog_wire.mapped) and decodes each
+    range in place, so only the pages of its own ranges are read.
     Output is Arrow with exact int64 pk/seq, for the reason given in
     rowbinary.encode_batches: pandas would widen nullable int64 to
     float64.  Files are re-opened by PATH on executors, so they must be
     visible to every executor (local mode, a shared filesystem or an
     object store)."""
-    from itertools import islice
+    from itertools import groupby, islice
 
-    from ..sources.binlog_wire import MAGIC, decode, pack_ranges
+    from ..sources.binlog_wire import decode, mapped, pack_ranges
 
     tasks = pack_ranges(
         ranges,
@@ -1476,23 +1485,15 @@ def decode_ranges(
     )
     if not tasks:  # empty binlog: zero transactions recorded
         return spark.createDataFrame([], _DECODED)
-    spans = []  # per task: its ranges with adjacent same-file ones merged
-    for task in tasks:
-        merged = []
-        for path, lo, hi in task:
-            if merged and merged[-1][0] == path and merged[-1][2] == lo:
-                merged[-1] = (path, merged[-1][1], hi)
-            else:
-                merged.append((path, lo, hi))
-        spans.append(merged)
     batch_rows = int(
         spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     )
 
-    def read(path, lo, hi):
-        with open(path, "rb") as fh:
-            fh.seek(lo)
-            return fh.read(hi - lo)
+    def task_rows(task):
+        for path, spans in groupby(task, key=lambda r: r[0]):
+            with mapped(path) as mm:
+                for _, lo, hi in spans:
+                    yield from (row for row, _ in decode(mm, lo, hi))
 
     def decode_task(batches):
         import pyarrow as pa
@@ -1503,11 +1504,7 @@ def decode_ranges(
         )
         for batch in batches:
             for i in batch.column(0).to_pylist():
-                rows = (
-                    row
-                    for path, lo, hi in spans[i]
-                    for row, _ in decode(MAGIC + read(path, lo, hi))
-                )
+                rows = task_rows(tasks[i])
                 while chunk := list(islice(rows, batch_rows)):
                     yield pa.RecordBatch.from_arrays(
                         [pa.array(c, type=f.type)
@@ -1515,19 +1512,13 @@ def decode_ranges(
                         schema=schema,
                     )
 
-    n = len(spans)
+    n = len(tasks)
     return spark.range(0, n, 1, n).mapInArrow(decode_task, _DECODED)
 
 
 @register(
     "cdc_decode_sharded",
-    oracle="""
-SELECT CASE WHEN event_type = 'signup' THEN 'insert'
-            WHEN event_type = 'error'  THEN 'delete'
-            ELSE 'update' END AS op,
-       user_id AS pk, event_id AS seq, value
-FROM events
-""",
+    oracle=_DECODE_ORACLE,
 )
 def cdc_decode_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed binlog decode — the sharded form of the one serial
@@ -1539,11 +1530,11 @@ def cdc_decode_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     case, where hours of binlog are already on disk and one decode
     thread is the bottleneck at 100x volume.
 
-    Split of work: indexing is a driver-side header-only STREAMING
-    walk (binlog_wire.tx_boundaries_stream — 19-byte fixed headers
-    read one at a time, event bodies seek()-skipped unread, so driver
-    memory stays O(1) in log size; r10 verdict "What's wrong" #1
-    closed), which yields every post-XID offset.  Each transaction is
+    Split of work: indexing is a driver-side header-only walk over the
+    memory-mapped log (binlog_wire.tx_boundaries over
+    binlog_wire.mapped — 19-byte fixed headers, event bodies never
+    touched, so the driver heap holds no log bytes), which yields
+    every post-XID offset.  Each transaction is
     one byte range, and decode_ranges packs the ranges into
     split-sized tasks (Spark's file-split rule over the session's
     maxPartitionBytes / openCostInBytes / defaultParallelism): one task
@@ -1562,12 +1553,14 @@ def cdc_decode_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     null bitmap and must survive the fan-out byte-identically."""
     from ..sources.binlog_wire import (
         MAGIC,
+        mapped,
         record_changelog,
-        tx_boundaries_stream,
+        tx_boundaries,
     )
 
     path = record_changelog(f"{sf_dir}/events.parquet")
-    bounds = [len(MAGIC), *tx_boundaries_stream(path)]
+    with mapped(path) as mm:
+        bounds = [len(MAGIC), *tx_boundaries(mm)]
     return decode_ranges(
         spark, [(path, lo, hi) for lo, hi in zip(bounds, bounds[1:])]
     )
@@ -1575,13 +1568,7 @@ def cdc_decode_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "cdc_decode_multifile",
-    oracle="""
-SELECT CASE WHEN event_type = 'signup' THEN 'insert'
-            WHEN event_type = 'error'  THEN 'delete'
-            ELSE 'update' END AS op,
-       user_id AS pk, event_id AS seq, value
-FROM events
-""",
+    oracle=_DECODE_ORACLE,
 )
 def cdc_decode_multifile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROTATE-aware multi-file binlog decode — the PRODUCTION form of
@@ -1596,9 +1583,8 @@ def cdc_decode_multifile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Each rotated file is the range ``[4, size)``: a file boundary is by
     construction a transaction boundary (MySQL rotates only at
-    event-group boundaries), and since ``file[:4] == MAGIC`` decoding
-    that range re-framed behind MAGIC is byte-identical to decoding
-    the whole file.  decode_ranges packs whole files into split-sized
+    event-group boundaries), so decoding that range is decoding the
+    whole file.  decode_ranges packs whole files into split-sized
     tasks (one task per ~4 MB by default rather than one Python task
     per 64 KB file), never splitting a file.  ROTATE and
     FORMAT_DESCRIPTION events are header-skipped by event_size, and

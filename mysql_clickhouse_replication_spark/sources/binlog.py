@@ -17,21 +17,25 @@ binlog-v4 byte file (the recorder is the offline stand-in for the
 server socket), and read()/readBetweenOffsets() run the real byte
 decoder over it.  Offsets are BYTE positions at transaction (XID)
 boundaries — the actual log_pos coordinate a replication client
-persists — so a production swap replaces only ``_load_bytes`` with the
-socket tail; the decode path and the offset/commit machinery are
-already the real thing.
+persists — so a production swap replaces only the mapped file
+(binlog_wire.mapped) with the socket tail; the decode path and the
+offset/commit machinery are already the real thing.  Every read maps
+the log anew, so bytes appended between triggers are read by the next
+one, and a transaction whose XID is not written yet waits for a later
+trigger, as BinLogStreamReader(blocking=True) follows a growing log.
 
 Scale note: SimpleDataSourceStreamReader reads on the driver — correct
 for a binlog (a binlog IS a single serial stream; MySQL offers no
 parallel tail), and the decoded rows fan out to executors immediately
-after ingestion.
+after ingestion.  The batch decode keys read the same bytes the same
+way, in parallel tasks (plans/cdc.py::decode_ranges).
 """
 
 from __future__ import annotations
 
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
-from .binlog_wire import MAGIC, decode, record_changelog
+from .binlog_wire import MAGIC, decode, mapped, record_changelog
 
 
 class BinlogReplaySource(DataSource):
@@ -67,31 +71,25 @@ class BinlogReplayReader(SimpleDataSourceStreamReader):
     """
 
     def __init__(self, options) -> None:
-        self.path = options.get("path")
+        self.log = record_changelog(options.get("path"))
         self.batch = int(options.get("batchsize", str(1 << 40)))
-        self._buf: bytes | None = None
-
-    def _bytes(self) -> bytes:
-        if self._buf is None:
-            with open(record_changelog(self.path), "rb") as fh:
-                self._buf = fh.read()
-        return self._buf
 
     def initialOffset(self) -> dict:
         return {"pos": len(MAGIC)}
 
     def read(self, start: dict):
-        buf = self._bytes()
         rows: list[tuple] = []
         pos = start["pos"]
-        for row, tx_end in decode(buf, start=pos):
-            if len(rows) >= self.batch and tx_end > pos:
-                break
-            rows.append(row)
-            pos = tx_end
+        with mapped(self.log) as mm:
+            for row, tx_end in decode(mm, start=pos):
+                if len(rows) >= self.batch and tx_end > pos:
+                    break
+                rows.append(row)
+                pos = tx_end
         if not rows:
             return iter(()), start
         return iter(rows), {"pos": pos}
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        return iter(r for r, _ in decode(self._bytes(), start["pos"], end["pos"]))
+        with mapped(self.log) as mm:
+            yield from (r for r, _ in decode(mm, start["pos"], end["pos"]))

@@ -7,10 +7,10 @@ over the native TCP protocol via clickhouse-driver, or over HTTP as
 body.  sources/binlog_wire.py closed the SOURCE side's byte layer in
 round 7; this module closes the SINK side the same way: a faithful
 byte-level implementation of the documented public RowBinary format
-(clickhouse.com/docs/en/interfaces/formats — RowBinary /
-RowBinaryWithNamesAndTypes), so the offline sink exercises the exact
-bytes a production POST body carries, and a deploy swaps only the
-transport (``sources/clickhouse.py::post_rowbinary_http``), not the
+(clickhouse.com/docs/en/interfaces/formats — RowBinary), so the
+offline sink exercises the exact bytes a production POST body carries,
+and a deploy swaps only the transport
+(``sources/clickhouse.py::post_rowbinary_http``), not the
 serialization.
 
 Format facts used (all from the public spec):
@@ -24,10 +24,7 @@ Format facts used (all from the public spec):
 * Date is UInt16 days since 1970-01-01; Date32 is Int32 days;
   DateTime is UInt32 epoch seconds; DateTime64(p) is Int64 ticks of
   10^-p s (stored unscaled as the integer tick count);
-* Array(T) is a LEB128 varint element count followed by the elements;
-* RowBinaryWithNamesAndTypes prepends a header block: varint column
-  count, then every column name as String, then every column type
-  name as String.
+* Array(T) is a LEB128 varint element count followed by the elements.
 
 Scale note: encoding runs on the EXECUTORS — each Arrow batch of a
 (micro-)batch becomes one payload (the insert-buffer flush unit, i.e.
@@ -229,27 +226,6 @@ def decode_rows(
             v, pos = decode_value(ch_type, buf, pos, as_bytes=i in bytes_cols)
             row.append(v)
         yield tuple(row)
-
-
-def encode_header(names: list[str], types: list[str]) -> bytes:
-    """RowBinaryWithNamesAndTypes header block (self-describing inserts;
-    lets the server validate column order instead of trusting it)."""
-    if len(names) != len(types):
-        raise ValueError("names/types length mismatch")
-    out = bytearray(write_varint(len(names)))
-    for s in (*names, *types):
-        raw = s.encode("utf-8")
-        out += write_varint(len(raw)) + raw
-    return bytes(out)
-
-
-def decode_header(buf: bytes) -> tuple[list[str], list[str], int]:
-    ncols, pos = read_varint(buf, 0)
-    strs = []
-    for _ in range(2 * ncols):
-        s, pos = decode_value("String", buf, pos)
-        strs.append(s)
-    return strs[:ncols], strs[ncols:], pos
 
 
 #: Spark SQL type -> ClickHouse wire type for the auto-mapped encoder

@@ -33,7 +33,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.cdc import decode_events
+from ..plans.cdc import _DECODE_ORACLE, decode_events
 from ..registry import register
 from ..session import session_memo, table
 
@@ -326,15 +326,6 @@ def stream_output_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_memory(agg, "update")
 
 
-_CDC_DECODE_ORACLE = """
-SELECT CASE WHEN event_type = 'signup' THEN 'insert'
-            WHEN event_type = 'error'  THEN 'delete'
-            ELSE 'update' END AS op,
-       user_id AS pk, event_id AS seq, value
-FROM events
-"""
-
-
 @register(
     "cdc_stream_source",
     oracle="""
@@ -369,7 +360,7 @@ def cdc_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_memory(agg, "complete")
 
 
-@register("cdc_sink", oracle=_CDC_DECODE_ORACLE)
+@register("cdc_sink", oracle=_DECODE_ORACLE)
 def cdc_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batched sink via foreachBatch — the reference's buffered
     'INSERT INTO clickhouse VALUES' loop. Offline the batch lands as
@@ -472,7 +463,7 @@ def cdc_sink_wire(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("cdc_checkpoint", oracle=_CDC_DECODE_ORACLE)
+@register("cdc_checkpoint", oracle=_DECODE_ORACLE)
 def cdc_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Checkpoint/resume — the engine-managed replacement for the
     reference's persisted (log_file, log_pos): run the sink pipeline with
@@ -574,7 +565,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_memory(joined, "append")
 
 
-@register("cdc_sink_idempotent", oracle=_CDC_DECODE_ORACLE)
+@register("cdc_sink_idempotent", oracle=_DECODE_ORACLE)
 def cdc_sink_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-once SINK semantics from an at-least-once stream: the
     foreachBatch writer lands each micro-batch in a batch_id-keyed
@@ -628,7 +619,7 @@ def cdc_sink_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-@register("stream_resume_incremental", oracle=_CDC_DECODE_ORACLE)
+@register("stream_resume_incremental", oracle=_DECODE_ORACLE)
 def stream_resume_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental resume — the property the reference's persisted
     (log_file, log_pos) actually buys, strictly stronger than

@@ -6,6 +6,8 @@ rows rather than an oracle engine."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from mysql_clickhouse_replication_spark.plans.cdc import compact
@@ -138,6 +140,62 @@ def test_default_trigger_drains_every_batch_exactly_once(
     batches = [p for p in qh.recentProgress if p.numInputRows > 0]
     assert len(batches) > 1, len(batches)
     assert sum(p.numInputRows for p in batches) == total
+    out = spark.read.parquet(sink)
+    assert out.count() == total
+    assert out.select("seq").distinct().count() == total
+    _assert_same_rows(out, _batch_decode(spark, sf_dir))
+
+
+def test_default_trigger_follows_a_growing_log(spark, sf_dir, tmp_path):
+    """The reader follows its log as it grows, as
+    BinLogStreamReader(blocking=True) does: a query that drained a
+    prefix of the recording (cut at a transaction boundary) picks up
+    the transactions appended after it on a later trigger, and every
+    row lands exactly once."""
+    import shutil
+
+    from mysql_clickhouse_replication_spark.sources.binlog_wire import (
+        mapped,
+        record_changelog,
+        tx_boundaries,
+    )
+
+    _register_binlog_source(spark)
+    events = str(tmp_path / "events.parquet")
+    shutil.copy(f"{sf_dir}/events.parquet", events)  # its own recording
+    log = record_changelog(events)
+    with mapped(log) as mm:
+        bounds = tx_boundaries(mm)
+        full = mm[:]
+
+    def swap_in(blob: bytes) -> None:
+        with open(log + ".swap", "wb") as fh:
+            fh.write(blob)
+        os.replace(log + ".swap", log)
+
+    sink = str(tmp_path / "sink")
+    total = spark.read.parquet(events).count()
+    try:
+        swap_in(full[: bounds[len(bounds) // 2]])
+        qh = (
+            spark.readStream.format("binlog_replay")
+            .option("path", events)
+            .load()
+            .writeStream.format("parquet")
+            .option("path", sink)
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .start()
+        )
+        try:
+            qh.processAllAvailable()
+            prefix = spark.read.parquet(sink).count()
+            swap_in(full)
+            qh.processAllAvailable()
+        finally:
+            qh.stop()
+    finally:
+        os.remove(log)
+    assert 0 < prefix < total
     out = spark.read.parquet(sink)
     assert out.count() == total
     assert out.select("seq").distinct().count() == total

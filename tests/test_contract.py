@@ -390,6 +390,37 @@ def test_one_nearest_centroid_rule():
     assert not outside, "\n".join(map(str, outside))
 
 
+def test_one_binlog_read_path():
+    """The binlog-v4 layout is read in one place: the 19-byte event
+    header is unpacked only by ``binlog_wire._frames``; no module that
+    imports binlog_wire opens a file itself (a log is opened by
+    ``binlog_wire.mapped``); and the seek/read twin of the index walk,
+    ``tx_boundaries_stream``, is gone."""
+    import inspect
+
+    from mysql_clickhouse_replication_spark.sources import binlog_wire
+
+    lines, start = inspect.getsourcelines(binlog_wire._frames)
+    inside = range(start, start + len(lines))
+    found = _package_grep(r"_HEADER\.unpack")
+    outside = [
+        f for f in found
+        if not (f[0] == "sources/binlog_wire.py" and f[1] in inside)
+    ]
+    assert len(found) - len(outside) == 1
+    assert not outside, "\n".join(map(str, outside))
+
+    readers = {f[0] for f in _package_grep(r"binlog_wire import")}
+    assert {"sources/binlog.py", "plans/cdc.py"} <= readers
+    opens = [
+        f for f in _package_grep(r"(?<![\w.])open\(") if f[0] in readers
+    ]
+    assert not opens, "\n".join(map(str, opens))
+
+    assert not _package_grep(r"tx_boundaries_stream")
+    assert not hasattr(binlog_wire, "tx_boundaries_stream")
+
+
 def test_one_literal_builder():
     """Literal frames are built by ``operators._util.values_df`` from
     ``_sql_lit``'s typed literals; the one-row SELECT-over-VALUES

@@ -1579,8 +1579,9 @@ def test_opq_ivf_state_typed_empty_without_centroid_rows(
     corpus rows with vec_id < K.  On an embeddings table with none of
     those rows the literal state must be a TYPED empty array — an
     untyped ``array()`` failed analysis of the ``c.cid`` / ``c.cv``
-    lambdas at construction — and every corpus row still gets its
-    (empty-codebook) argmin columns."""
+    lambdas at construction — no corpus row gets a code from the empty
+    codebook, and the keys built on that state match their DuckDB
+    oracles, which return no rows."""
     from mysql_clickhouse_replication_spark.functions.ann_index import (
         _ivf_centroids_frame,
         _opq_spaces,
@@ -1596,10 +1597,20 @@ def test_opq_ivf_state_typed_empty_without_centroid_rows(
     typed = "array<struct<cid:bigint,cv:array<bigint>>>"
     assert cents.dtypes == [("pcents", typed), ("rcents", typed)]
     assert [tuple(r) for r in cents.collect()] == [([], [])]
-    assert out.count() == both.count() > 0
+    assert both.count() > 0 and out.count() == 0
     ivfc = _ivf_centroids_frame(spark, str(d))
     assert ivfc.dtypes == [("ivfc", typed)]
     assert [tuple(r) for r in ivfc.collect()] == [([],)]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM"
+        f" read_parquet('{d}/embeddings.parquet')"
+    )
+    keys = (
+        "sim_opq_rotate", "sim_opq_train", "sim_ivfpq_search_trained",
+        "sim_opq_alternate",
+    )
+    _assert_keys_match_oracles(spark, str(d), con, keys)
 
 
 def test_ann_keys_on_empty_embeddings(spark, sf_dir, tmp_path):
@@ -1609,8 +1620,6 @@ def test_ann_keys_on_empty_embeddings(spark, sf_dir, tmp_path):
     on an empty iterate instead of raising on ``max()`` of nothing, and
     the OPQ distortion surfaces emit no row for a subspace with no
     vectors, like the oracles' GROUP BY."""
-    from tools.verify_local import _hash_rows
-
     for name in os.listdir(sf_dir):
         if name != "embeddings.parquet":
             os.symlink(os.path.join(sf_dir, name), tmp_path / name)
@@ -1629,10 +1638,18 @@ def test_ann_keys_on_empty_embeddings(spark, sf_dir, tmp_path):
         "sim_ivfpq_search", "sim_opq_train", "sim_ivfpq_search_trained",
         "sim_opq_alternate", "sim_ivfpq_residual",
     )
+    _assert_keys_match_oracles(spark, str(tmp_path), con, keys)
+
+
+def _assert_keys_match_oracles(spark, sf_dir, con, keys) -> None:
+    """Every key of ``keys`` on ``sf_dir`` hash-matches its oracle run
+    on ``con``; all failures are reported, not just the first."""
+    from tools.verify_local import _hash_rows
+
     failures = []
     for key in keys:
         try:
-            sdf = e.queries()[key](spark, str(tmp_path))
+            sdf = e.queries()[key](spark, sf_dir)
             srows = [tuple(r) for r in sdf.collect()]
         except Exception as exc:  # report every key, not just the first
             failures.append(f"{key}: {type(exc).__name__}: {exc}"[:300])

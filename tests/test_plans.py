@@ -1872,13 +1872,15 @@ def test_decode_empty_log_is_typed_empty_frame(spark, tmp_path):
     from mysql_clickhouse_replication_spark.sources.binlog_wire import (
         MAGIC,
         encode_changelog,
-        tx_boundaries_stream,
+        mapped,
+        tx_boundaries,
     )
 
     path = str(tmp_path / "empty.binlog")
     with open(path, "wb") as fh:
         fh.write(encode_changelog([]))
-    bounds = [len(MAGIC), *tx_boundaries_stream(path)]
+    with mapped(path) as mm:
+        bounds = [len(MAGIC), *tx_boundaries(mm)]
     df = decode_ranges(
         spark, [(path, lo, hi) for lo, hi in zip(bounds, bounds[1:])]
     )
@@ -1895,12 +1897,14 @@ def test_decode_sharded_split_sized_arrow_tasks(plans, spark, sf_dir, duck):
     item stays closed: a lowered split fans the decode out)."""
     from mysql_clickhouse_replication_spark.sources.binlog_wire import (
         MAGIC,
+        mapped,
         record_changelog,
-        tx_boundaries_stream,
+        tx_boundaries,
     )
 
     path = record_changelog(f"{sf_dir}/events.parquet")
-    bounds = [len(MAGIC), *tx_boundaries_stream(path)]
+    with mapped(path) as mm:
+        bounds = [len(MAGIC), *tx_boundaries(mm)]
     ranges = [(path, lo, hi) for lo, hi in zip(bounds, bounds[1:])]
     _assert_decode_split(plans, spark, sf_dir, duck, "cdc_decode_sharded", ranges)
 

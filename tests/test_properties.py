@@ -609,13 +609,17 @@ def test_binlog_wire_shard_decode_equals_serial(rows, cut_seed):
     changelog, (1) decode(encode(x)) == x row-for-row, (2) the
     header-only tx_boundaries index equals the decoder's own resume
     points exactly, and (3) cutting the byte range at ANY boundary
-    subset and decoding the shards yields the same row multiset as one
-    serial pass — shard boundaries are provably legal resume points,
-    NaN-free NULLs included."""
+    subset and decoding the shards — over bytes and over the mapped
+    file, the form the decode tasks run — yields the same row multiset
+    as one serial pass, NaN-free NULLs included."""
+    import os
+    import tempfile
+
     from mysql_clickhouse_replication_spark.sources.binlog_wire import (
         MAGIC,
         decode,
         encode_changelog,
+        mapped,
         tx_boundaries,
     )
 
@@ -625,48 +629,45 @@ def test_binlog_wire_shard_decode_equals_serial(rows, cut_seed):
     bounds = tx_boundaries(buf)
     assert bounds == sorted({tx for _, tx in decode(buf)})
     cuts = [len(MAGIC), *bounds]
-    if len(cuts) > 1:
-        rng = random.Random(cut_seed)
-        k = rng.randint(1, len(cuts) - 1)
-        mids = sorted(rng.sample(range(1, len(cuts)), k - 1)) if k > 1 else []
-        idxs = [0, *mids, len(cuts) - 1]
-        sharded = [
-            r
-            for a, b in zip(idxs, idxs[1:])
-            for r, _ in decode(buf, cuts[a], cuts[b])
-        ]
-        assert sorted(map(repr, sharded)) == sorted(map(repr, serial))
-        # the ranged-read form cdc_decode_sharded's tasks actually run:
-        # re-frame each shard's bytes behind a fresh magic and decode
-        # the whole extent — must equal absolute-offset decoding
-        reframed = [
-            r
-            for a, b in zip(idxs, idxs[1:])
-            for r, _ in decode(MAGIC + buf[cuts[a]: cuts[b]], len(MAGIC))
-        ]
-        assert sorted(map(repr, reframed)) == sorted(map(repr, serial))
+    rng = random.Random(cut_seed)
+    k = rng.randint(1, len(cuts) - 1) if len(cuts) > 1 else 0
+    mids = sorted(rng.sample(range(1, len(cuts)), k - 1)) if k > 1 else []
+    idxs = [0, *mids, len(cuts) - 1] if k else []
+    with tempfile.TemporaryDirectory(prefix="txshards_") as d:
+        path = os.path.join(d, "log.binlog")
+        with open(path, "wb") as fh:
+            fh.write(buf)
+        with mapped(path) as mm:
+            for src in (buf, mm):
+                sharded = [
+                    r
+                    for a, b in zip(idxs, idxs[1:])
+                    for r, _ in decode(src, cuts[a], cuts[b])
+                ]
+                assert sorted(map(repr, sharded)) == sorted(map(repr, serial))
 
 
 @given(rows=_wire_rows, trunc_seed=st.integers(0, 2**16))
 @settings(max_examples=60, deadline=None)
 def test_tx_boundaries_stream_equals_inmem(rows, trunc_seed):
-    """The r11 streamed index (tx_boundaries_stream: seek/skip header
-    walk over the FILE, O(1) driver memory) must return EXACTLY the
-    in-memory walk's offsets for any changelog — including logs
+    """The index the driver builds over the mapped FILE (the header
+    walk run on a memory map, pages read on demand) must return EXACTLY
+    the in-memory walk's offsets for any changelog — including logs
     truncated mid-event / mid-transaction, where both walks must stop
     at the last complete event and emit no boundary inside the partial
-    tail."""
+    tail: the full log's boundaries up to the cut."""
     import os
     import tempfile
 
     from mysql_clickhouse_replication_spark.sources.binlog_wire import (
         MAGIC,
         encode_changelog,
+        mapped,
         tx_boundaries,
-        tx_boundaries_stream,
     )
 
     buf = encode_changelog(rows)
+    bounds = tx_boundaries(buf)
     rng = random.Random(trunc_seed)
     # full log + a random truncation point anywhere past the magic
     cuts = [len(buf), rng.randint(len(MAGIC), len(buf))]
@@ -676,7 +677,9 @@ def test_tx_boundaries_stream_equals_inmem(rows, trunc_seed):
             path = os.path.join(d, f"log{i}.binlog")
             with open(path, "wb") as fh:
                 fh.write(blob)
-            assert tx_boundaries_stream(path) == tx_boundaries(blob)
+            with mapped(path) as mm:
+                assert tx_boundaries(mm) == tx_boundaries(blob)
+            assert tx_boundaries(blob) == [b for b in bounds if b <= cut]
 
 
 @given(rows=_wire_rows, max_bytes=st.integers(256, 4096))
@@ -692,13 +695,28 @@ def test_binlog_rotated_chain_decode_equals_serial(rows, max_bytes):
     the last file has none), that rotation actually fires when the log
     outgrows max_bytes, and that every per-file tx boundary stays a
     legal resume point (files never split mid-transaction)."""
+    import struct
+
     from mysql_clickhouse_replication_spark.sources.binlog_wire import (
+        ROTATE_EVENT,
+        _HEADER,
+        _frames,
         encode_changelog,
         encode_changelog_rotated,
         decode,
-        read_rotate,
         tx_boundaries,
     )
+
+    def read_rotate(buf):
+        """The file's ROTATE linkage (next file name, next start
+        position), or None for the chain's last file."""
+        out = None
+        for pos, type_code, size in _frames(buf):
+            if type_code == ROTATE_EVENT:
+                body = buf[pos + _HEADER.size : pos + size]
+                nxt = struct.unpack_from("<Q", body)[0]
+                out = (body[8:].decode("ascii"), nxt)
+        return out
 
     serial_blob = encode_changelog(rows)
     serial = [r for r, _ in decode(serial_blob)]

@@ -143,6 +143,56 @@ def test_binlog_wire_rejects_mid_transaction_range():
         list(w.decode(buf, end=xid_at))
 
 
+def test_binlog_wire_mapped_empty_file_is_bad_magic(tmp_path):
+    """An empty file holds no magic: ``mapped`` raises the decoder's
+    "bad magic" error, not mmap's "cannot mmap an empty file"."""
+    from mysql_clickhouse_replication_spark.sources import binlog_wire as w
+
+    path = tmp_path / "empty.binlog"
+    path.write_bytes(b"")
+    with pytest.raises(ValueError, match="bad magic"):
+        with w.mapped(str(path)):
+            pass
+
+
+def test_binlog_reader_waits_for_an_unfinished_transaction(sf_dir, tmp_path):
+    """A live log can end inside a transaction (its ROWS event written,
+    its XID not yet): the stream reader stops at the last XID, and the
+    next read, once the log has grown, picks the transaction up."""
+    import os
+    import shutil
+
+    from mysql_clickhouse_replication_spark.sources import binlog_wire as w
+    from mysql_clickhouse_replication_spark.sources.binlog import (
+        BinlogReplayReader,
+    )
+
+    events = str(tmp_path / "events.parquet")
+    shutil.copy(f"{sf_dir}/events.parquet", events)  # its own recording
+    reader = BinlogReplayReader({"path": events})
+    try:
+        with w.mapped(reader.log) as mm:
+            full = mm[:]
+        bounds = w.tx_boundaries(full)
+        done, cut = bounds[9], bounds[10] - 1  # inside the 11th XID event
+
+        def swap_in(blob: bytes) -> None:
+            with open(reader.log + ".swap", "wb") as fh:
+                fh.write(blob)
+            os.replace(reader.log + ".swap", reader.log)
+
+        swap_in(full[:cut])
+        rows, off = reader.read({"pos": len(w.MAGIC)})
+        assert off == {"pos": done}
+        assert list(rows) == [r for r, tx in w.decode(full) if tx <= done]
+        swap_in(full)
+        rows, off = reader.read(off)
+        assert off == {"pos": bounds[-1]}
+        assert list(rows) == [r for r, tx in w.decode(full) if tx > done]
+    finally:
+        os.remove(reader.log)
+
+
 def test_binlog_wire_recorder_matches_batch_decode(spark, sf_dir):
     """record_changelog(events.parquet) -> decode must reproduce the
     cdc decode mapping row-for-row in seq order (the same op/pk/seq/
@@ -214,17 +264,6 @@ def test_rowbinary_varint_leb128():
     s = "x" * 200
     enc = rb.encode_value("String", s)
     assert enc[:2] == b"\xc8\x01" and len(enc) == 202
-
-
-def test_rowbinary_names_and_types_header():
-    from mysql_clickhouse_replication_spark.sources import rowbinary as rb
-
-    hdr = rb.encode_header(["pk", "v"], ["Int64", "Nullable(Float64)"])
-    assert hdr[0] == 2  # varint column count
-    names, types, pos = rb.decode_header(hdr)
-    assert names == ["pk", "v"]
-    assert types == ["Int64", "Nullable(Float64)"]
-    assert pos == len(hdr)
 
 
 def test_rowbinary_rows_roundtrip_and_strictness():
